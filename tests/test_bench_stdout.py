@@ -71,6 +71,12 @@ def test_reconstruct_from_2000_char_tail(tmp_path):
         assert abs(parsed["queries"][name] - sec) < 0.0005
 
 
+def _block_registry(monkeypatch):
+    # a None entry in sys.modules makes ``import __spark_entry__`` raise,
+    # so only the named-chunk path can fill the per-query dict
+    monkeypatch.setitem(sys.modules, "__spark_entry__", None)
+
+
 def test_reconstruct_from_named_chunks_without_registry(tmp_path, monkeypatch):
     """A ~10 KB capture keeps every named chunk: reconstruction must
     not depend on the registry import (names ride in the chunks)."""
@@ -80,8 +86,27 @@ def test_reconstruct_from_named_chunks_without_registry(tmp_path, monkeypatch):
     tail = blob[blob.index('{"metric":"per_query_chunk"') :]
     art = tmp_path / "tail.json"
     art.write_text(json.dumps({"tail": tail}))
+    _block_registry(monkeypatch)
     parsed = bench.load_bench_artifact(str(art))
     assert parsed["queries"] == timings
+
+
+def test_two_run_capture_takes_newest_chunks(tmp_path, monkeypatch):
+    """A capture holding two runs' chunk lines (full lines cut away)
+    must attach the NEWER run's timings to the newer headline."""
+    older = _registry_timings()
+    newer = {name: round(t + 1.0, 3) for name, t in older.items()}
+    runs = []
+    for timings in (older, newer):
+        blob = _stdout_blob(timings)
+        runs.append(blob[blob.index('{"metric":"per_query_chunk"') :])
+    assert len(bench.per_query_lines(older)) == len(bench.per_query_lines(newer))
+    art = tmp_path / "two_runs.json"
+    art.write_text(json.dumps({"tail": "".join(runs)}))
+    _block_registry(monkeypatch)
+    parsed = bench.load_bench_artifact(str(art))
+    assert parsed["value"] == round(sum(newer.values()), 3)
+    assert parsed["queries"] == newer
 
 
 def test_full_line_still_preferred(tmp_path):

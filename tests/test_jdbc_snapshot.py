@@ -1,16 +1,16 @@
 """JDBC upsert writer (SQL generation + batching via fake DB-API
-connection) and snapshot export with retention."""
+connection) and the pipeline's snapshot retention (S9: keep the newest
+``KEEP_VERSIONS`` table versions)."""
 
 from __future__ import annotations
 
-import time
+import shutil
 
+from usajobs_etl_service_spark.pipeline import KEEP_VERSIONS, JobPipeline
 from usajobs_etl_service_spark.sinks.jdbc import build_upsert_sql, jdbc_upsert, upsert_partition
-from usajobs_etl_service_spark.sinks.snapshot import (
-    list_snapshots,
-    read_latest_snapshot,
-    write_snapshot,
-)
+
+from tests.test_pipeline import _pipeline
+from tests.test_rest_source import make_page
 
 
 class FakeCursor:
@@ -99,16 +99,40 @@ def test_jdbc_upsert_distributed(spark):
     assert stats["updated"] >= 1
 
 
+def _table_with_8_versions(spark, tmp_path, table_path=None):
+    """One real run, its version copied under 7 older names -> 8 versions."""
+    p = _pipeline(spark, tmp_path, [make_page(5, 0, 5)], table_path)
+    assert p.run().status == "success"
+    (real,) = p._versions()
+    local = tmp_path / "tbl"
+    for i in range(1, KEEP_VERSIONS + 1):
+        shutil.copytree(local / real, local / f"v={i:013d}")
+    assert len(p._versions()) == KEEP_VERSIONS + 1
+    return p
+
+
 def test_snapshot_retention(spark, tmp_path):
-    base = str(tmp_path / "snaps")
-    df = spark.range(5)
-    paths = []
-    for _ in range(4):
-        paths.append(write_snapshot(df, base, keep_last=3))
-        time.sleep(0.002)
-    snaps = list_snapshots(base)
-    assert len(snaps) == 3  # oldest pruned
-    assert read_latest_snapshot(spark, base).count() == 5
+    p = _table_with_8_versions(spark, tmp_path)
+    before = p._versions()
+    m = p.run()
+    assert m.status == "success"
+    after = p._versions()
+    assert len(after) == KEEP_VERSIONS  # oldest pruned
+    assert after == sorted(before + [after[-1]])[-KEEP_VERSIONS:]
+    assert p.current_table().count() == 5
+
+
+def test_failed_run_deletes_no_version(spark, tmp_path, monkeypatch):
+    p = _table_with_8_versions(spark, tmp_path)
+    before = p._versions()
+
+    def fail_write(self, df):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(JobPipeline, "_write_version", fail_write)
+    m = p.run()
+    assert m.status == "failed" and "disk full" in m.errors[0]
+    assert p._versions() == before
 
 
 def test_jdbc_upsert_dedups_batch_by_key(spark):
@@ -173,12 +197,11 @@ def test_jdbc_upsert_writes_real_order_column(spark, tmp_path):
 
 
 def test_snapshot_retention_with_file_uri(spark, tmp_path):
-    """Snapshot maintenance goes through the Hadoop FS API, so a
-    scheme-qualified URI (file:, and by extension hdfs:/s3a:) works."""
-    base = "file://" + str(tmp_path / "snaps_uri")
-    df = spark.range(3)
-    for _ in range(3):
-        write_snapshot(df, base, keep_last=2)
-        time.sleep(0.002)
-    assert len(list_snapshots(base)) == 2
-    assert read_latest_snapshot(spark, base).count() == 3
+    """Version listing and pruning go through the Hadoop FS API, so a
+    scheme-qualified table URI (file:, and by extension hdfs:/s3a:)
+    works."""
+    p = _table_with_8_versions(spark, tmp_path, "file://" + str(tmp_path / "tbl"))
+    assert p.run().status == "success"
+    assert len(p._versions()) == KEEP_VERSIONS
+    assert len([d for d in (tmp_path / "tbl").iterdir() if d.name.startswith("v=")]) == KEEP_VERSIONS
+    assert p.current_table().count() == 5

@@ -3,19 +3,22 @@
 
 from __future__ import annotations
 
+import tempfile
+
 from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark.pipeline import JobPipeline, PipelineConfig
-from usajobs_etl_service_spark.sources.rest_api import RestPageSource, RetryPolicy
+from usajobs_etl_service_spark.sources.rest_api import RateLimitedError, RestPageSource, RetryPolicy
 
 from tests.test_rest_source import make_page, no_sleep, paged_transport
 
 
-def _pipeline(spark, tmp_path, pages):
+def _pipeline(spark, tmp_path, pages, table_path=None):
     src = RestPageSource(
         transport=paged_transport(pages), page_size=5, retry=RetryPolicy(sleep=no_sleep), sleep=no_sleep
     )
-    cfg = PipelineConfig(keyword="data", location=None, max_pages=20, table_path=str(tmp_path / "tbl"))
+    table_path = table_path or str(tmp_path / "tbl")
+    cfg = PipelineConfig(keyword="data", location=None, max_pages=20, table_path=table_path)
     return JobPipeline(spark, src, cfg)
 
 
@@ -25,6 +28,7 @@ def test_first_run_inserts_all(spark, tmp_path):
     assert m.status == "success"
     assert m.jobs_extracted == 8
     assert (m.inserted, m.updated) == (8, 0)
+    assert m.api_calls == 2
     assert p.current_table().count() == 8
 
 
@@ -72,7 +76,10 @@ def test_statistics_readback(spark, tmp_path):
 
 
 def test_failed_run_logged_not_raised(spark, tmp_path):
+    calls = []
+
     def explode(params):
+        calls.append(params)
         raise RateLimitedError("429")
 
     p = _pipeline(spark, tmp_path, [])
@@ -80,3 +87,20 @@ def test_failed_run_logged_not_raised(spark, tmp_path):
     m = p.run()
     assert m.status == "success"  # rate-limit abort yields empty scan, not failure
     assert m.jobs_extracted == 0
+    assert len(calls) == 1  # a 429 is neither retried nor skipped past
+    assert m.api_calls == 1
+
+
+def test_runs_remove_their_spool(spark, tmp_path, monkeypatch):
+    scratch = tmp_path / "tmp"
+    scratch.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(scratch))
+    p = _pipeline(spark, tmp_path, [make_page(5, 0, 8), make_page(3, 5, 8)])
+    for _ in range(2):
+        assert p.run().status == "success"
+    assert not list(scratch.glob("rest_spool_*"))
+    assert p.current_table().count() == 8
+    # a run that fails after the scan removes its spool too
+    monkeypatch.setattr(JobPipeline, "_write_version", lambda self, df: 1 / 0)
+    assert p.run().status == "failed"
+    assert not list(scratch.glob("rest_spool_*"))

@@ -110,6 +110,9 @@ class TestResilience:
         src = _source(flaky)
         assert len(list(src.fetch_pages("data"))) == 1
         assert len(attempts) == 3
+        assert src.api_calls == 1  # a retried page is one request
+        assert len(list(src.fetch_pages("data"))) == 1
+        assert src.api_calls == 1  # reset per scan
 
     def test_page_skipped_after_retries_exhausted(self):
         def always_fail_page1(params):
@@ -129,6 +132,7 @@ class TestResilience:
 
         src = _source(rl, max_pages=5)
         assert [p for p, _ in src.fetch_pages("data")] == [1]
+        assert src.api_calls == 2
 
     def test_circuit_breaker_opens_and_recovers(self):
         clock = {"t": 0.0}
@@ -165,64 +169,3 @@ class TestScanToDataFrame:
         src = _source(paged_transport([]))
         df = scan_to_dataframe(spark, src, "data", spool_dir=str(tmp_path / "spool"))
         assert df.count() == 0
-
-
-class TestSpoolCompaction:
-    def test_compacted_spool_reads_identically(self, spark, tmp_path):
-        from usajobs_etl_service_spark.sources.rest_api import (
-            RestPageSource,
-            RetryPolicy,
-            compact_spool,
-            read_compacted_spool,
-            read_spool,
-            spool_pages_to_json,
-        )
-
-        src = RestPageSource(
-            transport=paged_transport([make_page(5, 0, 12), make_page(5, 5, 12), make_page(2, 10, 12)]),
-            page_size=5,
-            retry=RetryPolicy(sleep=no_sleep),
-            sleep=no_sleep,
-        )
-        spool = str(tmp_path / "spool")
-        pages, _ = spool_pages_to_json(src, spool, "data")
-        assert pages == 3  # three tiny files
-
-        out = str(tmp_path / "compacted")
-        n_files = compact_spool(spark, spool, out, target_file_bytes=10**9)
-        assert n_files == 1  # tiny input -> one healthy file
-
-        import os
-
-        parquet_files = [f for f in os.listdir(out) if f.endswith(".parquet")]
-        assert len(parquet_files) == 1
-
-        # extracted_at is current_timestamp() -> volatile between reads
-        orig = read_spool(spark, spool).drop("extracted_at")
-        comp = read_compacted_spool(spark, out).drop("extracted_at")
-        key = lambda r: r["position_uri"]
-        assert sorted(orig.collect(), key=key) == sorted(comp.collect(), key=key)
-
-    def test_target_size_splits_files(self, spark, tmp_path):
-        from usajobs_etl_service_spark.sources.rest_api import (
-            RestPageSource,
-            RetryPolicy,
-            compact_spool,
-            spool_pages_to_json,
-        )
-
-        src = RestPageSource(
-            transport=paged_transport([make_page(50, i * 50, 500) for i in range(10)]),
-            page_size=50,
-            retry=RetryPolicy(sleep=no_sleep),
-            sleep=no_sleep,
-        )
-        spool = str(tmp_path / "spool")
-        spool_pages_to_json(src, spool, "data")
-
-        from usajobs_etl_service_spark.fs import dir_size_bytes
-
-        total = dir_size_bytes(spool, spark)
-        target = max(total // 3, 1)
-        n_files = compact_spool(spark, spool, str(tmp_path / "out"), target_file_bytes=target)
-        assert 3 <= n_files <= 4  # ceil(total/target)

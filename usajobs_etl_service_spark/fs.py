@@ -45,18 +45,3 @@ def delete_dir(path: str, spark: SparkSession | None = None) -> bool:
     spark = _active_spark(spark)
     fs, hpath = _fs_and_path(spark, path)
     return bool(fs.delete(hpath, True))
-
-
-def exists(path: str, spark: SparkSession | None = None) -> bool:
-    spark = _active_spark(spark)
-    fs, hpath = _fs_and_path(spark, path)
-    return bool(fs.exists(hpath))
-
-
-def dir_size_bytes(path: str, spark: SparkSession | None = None) -> int:
-    """Total bytes of the files directly under ``path`` (0 if absent)."""
-    spark = _active_spark(spark)
-    fs, hpath = _fs_and_path(spark, path)
-    if not fs.exists(hpath):
-        return 0
-    return sum(st.getLen() for st in fs.listStatus(hpath) if st.isFile())

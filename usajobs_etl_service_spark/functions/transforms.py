@@ -1,5 +1,6 @@
-"""Scalar transforms F1-F14 and the validation predicate P2 as native
-Column expressions (SURVEY.md §2.8, §2.10).
+"""Scalar transforms F1-F5, F12-F13 and the validation predicate P2 as
+native Column expressions (SURVEY.md §2.8, §2.10). F6-F11 and F14 are
+single Spark built-ins used inline where they apply (COVERAGE.md §2.8).
 
 Parity notes: each function reproduces the *observable* golden behavior of
 the reference's Python helpers (reference ``etl/etl.py:299-348``,
@@ -117,17 +118,12 @@ def parse_iso_date(col: Column) -> Column:
 
 
 # ---------------------------------------------------------------------------
-# F5 / F6 — first-of-array field, default-on-missing
+# F5 — first-of-array field
 # ---------------------------------------------------------------------------
 
 def first_field(array_col: Column, field: str, default: str = "") -> Column:
     """F5: ``arr[0].field`` else default (reference etl.py:259-268)."""
     return F.coalesce(F.get(array_col, 0).getField(field), F.lit(default))
-
-
-def default_on_missing(col: Column, default: str = "") -> Column:
-    """F6: ``dict.get(k, default)`` parity — NULL -> default."""
-    return F.coalesce(col, F.lit(default))
 
 
 # ---------------------------------------------------------------------------
@@ -144,35 +140,6 @@ def is_valid_posting(title: Column, uri: Column) -> Column:
         & (F.trim(uri) != "")
         & uri.startswith("http")
     )
-
-
-# ---------------------------------------------------------------------------
-# F8-F11, F14 — thin parity wrappers (documented Spark equivalents)
-# ---------------------------------------------------------------------------
-
-def days_ago(n: int) -> Column:
-    """F8: ``CURRENT_DATE - INTERVAL 'n days'`` (reference init.sql:56)."""
-    return F.date_sub(F.current_date(), n)
-
-
-def as_text(col: Column) -> Column:
-    """F9: ``::text`` cast (reference monitor.sh:21-39)."""
-    return col.cast("string")
-
-
-def ts_to_date(col: Column) -> Column:
-    """F10: ``created_at::date`` (reference monitor.sh:52)."""
-    return F.to_date(col)
-
-
-def left_n(col: Column, n: int) -> Column:
-    """F11: ``LEFT(s, n)`` display truncation (reference monitor.sh:49-51)."""
-    return F.substring(col, 1, n)
-
-
-def uri_is_http(col: Column) -> Column:
-    """F14: ``startswith("http")`` (reference etl.py:122)."""
-    return col.startswith("http")
 
 
 # ---------------------------------------------------------------------------

@@ -9,6 +9,7 @@ Stage map (reference -> here):
   flatten         -> flatten_postings (S4, P1-P3, F1-F7)
   dedup           -> dedup_first_wins on ingest_seq (A6)
   load            -> merge_upsert + merge metrics (S6/J1/A8)
+  retention       -> keep the newest KEEP_VERSIONS versions (S9)
   post-stats      -> summary_stats again
   run metrics     -> RunMetrics dataclass + etl_metadata append (A9)
 
@@ -19,17 +20,23 @@ stats ever reaches the driver.
 from __future__ import annotations
 
 import os
+import tempfile
 import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from usajobs_etl_service_spark.fs import delete_dir, list_dir
 from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
 from usajobs_etl_service_spark.operators.stats import summary_stats
 from usajobs_etl_service_spark.schemas import JOB_POSTING_SCHEMA
 from usajobs_etl_service_spark.sinks.upsert import merge_upsert, upsert_stats
 from usajobs_etl_service_spark.sources.rest_api import RestPageSource, scan_to_dataframe
+
+# versions kept after a successful run: the reference's nightly backup
+# keeps the last 7 copies (docker-compose.prod.yml:89-96)
+KEEP_VERSIONS = 7
 
 
 @dataclass
@@ -60,8 +67,10 @@ class JobPipeline:
     """Scan -> flatten -> dedup -> upsert -> stats, on parquet snapshots.
 
     The table is stored as date-partitioned parquet snapshots; each run
-    merges and writes a new snapshot version (S9-style), so readers are
-    never blocked and a bad run is a one-line rollback.
+    merges and writes a new snapshot version, so readers are never
+    blocked and a bad run is a one-line rollback. After a successful
+    write all but the newest ``KEEP_VERSIONS`` versions are deleted (S9);
+    a failed run deletes none.
     """
 
     def __init__(self, spark: SparkSession, source: RestPageSource, config: PipelineConfig | None = None):
@@ -74,8 +83,6 @@ class JobPipeline:
     def _versions(self) -> list[str]:
         # Hadoop FS listing, not os.listdir: the table path may live on
         # any Spark-writable filesystem (file:, hdfs:, s3a:, ...)
-        from usajobs_etl_service_spark.fs import list_dir
-
         return sorted(d for d in list_dir(self.config.table_path, self.spark) if d.startswith("v="))
 
     def current_table(self) -> DataFrame:
@@ -99,33 +106,44 @@ class JobPipeline:
         ).option("parquet.bloom.filter.enabled#position_uri", "true").mode("overwrite").parquet(out)
         return version
 
+    def _prune_versions(self) -> None:
+        for version in self._versions()[:-KEEP_VERSIONS]:
+            delete_dir(os.path.join(self.config.table_path, version), self.spark)
+
     # -- run ----------------------------------------------------------------
 
     def run(self) -> RunMetrics:
         t0 = time.perf_counter()
         metrics = RunMetrics()
         try:
-            base = self.current_table()
-            fresh = scan_to_dataframe(self.spark, self.source, self.config.keyword, self.config.location)
-            if "ingest_seq" in fresh.columns:
-                fresh = dedup_first_wins(fresh, ["position_uri"], "ingest_seq")
-            metrics.jobs_extracted = fresh.count()
-            if metrics.jobs_extracted:
-                fresh_cols = fresh.drop("ingest_seq").withColumn(
-                    "created_at", F.current_timestamp()
-                ).withColumn("updated_at", F.current_timestamp())
-                stats = upsert_stats(base, fresh_cols, ["position_uri"])
-                merged = merge_upsert(
-                    base,
-                    fresh_cols,
-                    ["position_uri"],
-                    preserve_cols=["created_at"],
-                    touch_cols=["updated_at"],
+            # the lazy count, stats and write plans all read the spool, so it
+            # is removed only once the write has returned or the run failed
+            with tempfile.TemporaryDirectory(prefix="rest_spool_", ignore_cleanup_errors=True) as spool:
+                base = self.current_table()
+                fresh = scan_to_dataframe(
+                    self.spark, self.source, self.config.keyword, self.config.location, spool_dir=spool
                 )
-                self._write_version(merged)
-                metrics.inserted = stats["inserted"]
-                metrics.updated = stats["updated"]
-                metrics.jobs_loaded = stats["total"]
+                metrics.api_calls = self.source.api_calls
+                if "ingest_seq" in fresh.columns:
+                    fresh = dedup_first_wins(fresh, ["position_uri"], "ingest_seq")
+                metrics.jobs_extracted = fresh.count()
+                if metrics.jobs_extracted:
+                    fresh_cols = fresh.drop("ingest_seq").withColumn(
+                        "created_at", F.current_timestamp()
+                    ).withColumn("updated_at", F.current_timestamp())
+                    stats = upsert_stats(base, fresh_cols, ["position_uri"])
+                    merged = merge_upsert(
+                        base,
+                        fresh_cols,
+                        ["position_uri"],
+                        preserve_cols=["created_at"],
+                        touch_cols=["updated_at"],
+                    )
+                    self._write_version(merged)
+                    self._prune_versions()
+                    metrics.inserted = stats["inserted"]
+                    metrics.updated = stats["updated"]
+                    metrics.jobs_loaded = stats["total"]
         except Exception as e:  # noqa: BLE001 — run-level tolerance, reference etl.py:686-692
             metrics.status = "failed"
             metrics.errors.append(f"{type(e).__name__}: {e}")

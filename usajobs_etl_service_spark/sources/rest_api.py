@@ -111,7 +111,10 @@ class CircuitBreaker:
 
 @dataclass
 class RestPageSource:
-    """Paginated search scan with pushdown options (S1-S3)."""
+    """Paginated search scan with pushdown options (S1-S3).
+
+    ``api_calls`` counts the page requests of the latest ``fetch_pages``
+    scan (a retried page counts once; reference etl.py:570-578)."""
 
     transport: Callable[[dict], dict]
     page_size: int = PAGE_SIZE_CAP
@@ -120,6 +123,7 @@ class RestPageSource:
     retry: RetryPolicy = field(default_factory=RetryPolicy)
     breaker: CircuitBreaker = field(default_factory=CircuitBreaker)
     sleep: Callable[[float], None] = time.sleep
+    api_calls: int = field(default=0, init=False)
 
     def _params(self, keyword: str, location: str | None, page: int) -> dict:
         # S2: predicate pushdown into query params (reference etl.py:191-199)
@@ -136,10 +140,12 @@ class RestPageSource:
     def fetch_pages(self, keyword: str, location: str | None = None) -> Iterator[tuple[int, dict]]:
         """Yield (page_number, payload) until exhaustion (S3)."""
         per_page = min(self.page_size, PAGE_SIZE_CAP)
+        self.api_calls = 0
         for page in range(1, self.max_pages + 1):
             if page > 1 and self.delay_seconds:
                 self.sleep(self.delay_seconds)  # rate limit (etl.py:211)
             params = self._params(keyword, location, page)
+            self.api_calls += 1
             try:
                 payload = self.retry.call(lambda: self.breaker.call(lambda: self.transport(params)))
             except RateLimitedError:
@@ -164,9 +170,9 @@ def spool_pages_to_json(
     spool_dir: str,
     keyword: str,
     location: str | None = None,
-) -> tuple[int, int]:
+) -> int:
     """Stream pages to one JSON file each under ``spool_dir`` (driver
-    memory stays O(1 page)); returns (pages_written, api_calls)."""
+    memory stays O(1 page)); returns the number of pages written."""
     os.makedirs(spool_dir, exist_ok=True)
     pages = 0
     run_id = uuid.uuid4().hex[:8]
@@ -174,45 +180,13 @@ def spool_pages_to_json(
         with open(os.path.join(spool_dir, f"page-{run_id}-{page:05d}.json"), "w") as f:
             json.dump({"page": page, "payload": json.dumps(payload)}, f)
         pages += 1
-    return pages, pages
+    return pages
 
 
 def read_spool(spark: SparkSession, spool_dir: str) -> DataFrame:
     """Distributed read of the spool -> flattened canonical postings."""
     raw = spark.read.schema("page long, payload string").json(spool_dir)
     return flatten_postings(parse_api_pages(raw))
-
-
-def compact_spool(
-    spark: SparkSession,
-    spool_dir: str,
-    out_dir: str,
-    *,
-    target_file_bytes: int = 128 * 1024 * 1024,
-) -> int:
-    """Compact a spool of many tiny per-page JSON files into
-    ``ceil(input_bytes / target_file_bytes)`` parquet files.
-
-    Long-running incremental ingest accretes one small file per API
-    page; at scale that small-files problem dominates scan planning
-    (one task + one open per file). Compaction restores healthy file
-    sizes — and parquet+snappy beats raw JSON bytes, so the target is
-    conservative. Returns the number of output files."""
-    import math
-
-    from usajobs_etl_service_spark.fs import dir_size_bytes
-
-    total = dir_size_bytes(spool_dir, spark)
-    n_files = max(1, math.ceil(total / target_file_bytes))
-    raw = spark.read.schema("page long, payload string").json(spool_dir)
-    raw.repartition(n_files).write.mode("overwrite").parquet(out_dir)
-    return n_files
-
-
-def read_compacted_spool(spark: SparkSession, out_dir: str) -> DataFrame:
-    """Flattened postings from a compacted spool (same result as
-    ``read_spool`` on the original)."""
-    return flatten_postings(parse_api_pages(spark.read.parquet(out_dir)))
 
 
 def scan_to_dataframe(
@@ -223,12 +197,14 @@ def scan_to_dataframe(
     spool_dir: str | None = None,
 ) -> DataFrame:
     """S1-S4 end-to-end: paginated scan -> spool -> distributed flatten.
-    Without a spool dir, pages go through a local temp dir (still never
-    a whole-run Python list)."""
+    Without a spool dir, pages go through a new local temp dir (still
+    never a whole-run Python list) that nothing removes; a long-lived
+    caller passes its own and removes it once the result is consumed,
+    as ``JobPipeline.run`` does."""
     import tempfile
 
     spool = spool_dir or tempfile.mkdtemp(prefix="rest_spool_")
-    pages, _ = spool_pages_to_json(source, spool, keyword, location)
+    pages = spool_pages_to_json(source, spool, keyword, location)
     if pages == 0:
         from usajobs_etl_service_spark.schemas import JOB_POSTING_SCHEMA
 
