@@ -324,37 +324,6 @@ def test_minhash_cap_drop_counters_observable(spark):
     assert obs.get == {"dropped_rows": 16 * 30, "dropped_buckets": 16}
 
 
-def test_minhash_load_duplicate_id_deterministic(spark, tmp_path):
-    """ADVICE r5 (low): latest-wins load breaks (id, batch_seq) ties by
-    signature-content hash — a duplicated id inside one append batch
-    loads the same signature every time instead of shuffle-order
-    roulette."""
-    path = str(tmp_path / "sigs")
-    base = spark.createDataFrame([(1, "alpha beta gamma delta epsilon zeta")], "doc_id long, text string")
-    ND.minhash_write(base, path, num_hashes=16)
-    dup_batch = spark.createDataFrame(
-        [(3, "first version of the duplicated document text here"),
-         (3, "second completely different text for the same id")],
-        "doc_id long, text string",
-    )
-    ND.minhash_append(dup_batch, path, batch_seq=1, num_hashes=16)
-
-    loads = [
-        {r["id"]: tuple(r["sig"]) for r in ND.minhash_load(spark, path).collect()}
-        for _ in range(2)
-    ]
-    assert loads[0] == loads[1]
-    # and the winner is the xxhash64-minimal signature, not an arbitrary one
-    raw = spark.read.option("mergeSchema", "true").parquet(path)
-    cands = (
-        raw.filter(F.col("id") == 3)
-        .select("sig", F.xxhash64(F.col("sig")).alias("h"))
-        .orderBy("h")
-        .collect()
-    )
-    assert loads[0][3] == tuple(cands[0]["sig"])
-
-
 def test_simhash_recovers_saturated_buckets(spark):
     """An over-cap duplicate cluster (the r6 VERDICT's measured recall
     hole: saturated band buckets were dropped wholesale) must now come

@@ -59,142 +59,3 @@ def test_persisted_sig_pairs_match_inline(spark, tmp_path):
         for r in minhash_pairs_from_sigs(sigs, threshold=0.8).collect()
     }
     assert persisted == inline and inline
-
-
-def test_incremental_pairs_match_full_run_restricted_to_new(spark, tmp_path):
-    """Incremental crawl shape: split the corpus into old/new, persist
-    old signatures, run the incremental operator — its pairs must be
-    exactly the full inline run's pairs that touch at least one new
-    doc (old-vs-old pairs are last run's knowledge and excluded)."""
-    from usajobs_etl_service_spark.operators.neardup import (
-        minhash_incremental_pairs,
-        minhash_load,
-        minhash_write,
-    )
-
-    docs = read_table(spark, "/root/testdata/sf0.01", "documents")
-    old = docs.filter(F.col("doc_id") % 4 != 0)
-    new = docs.filter(F.col("doc_id") % 4 == 0)
-    full = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_near_dup_pairs(docs, threshold=0.8).collect()
-    }
-    want = {(a, b, j) for a, b, j in full if a % 4 == 0 or b % 4 == 0}
-
-    minhash_write(old, str(tmp_path / "sigs"))
-    sigs = minhash_load(spark, str(tmp_path / "sigs"))
-    got = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_incremental_pairs(new, sigs, threshold=0.8).collect()
-    }
-    assert got == want and want, (len(got), len(want))
-
-
-def test_incremental_corpus_round_trip(spark, tmp_path):
-    """The full incremental-crawl CYCLE the 100 TB story depends on:
-    build corpus signatures -> query batch 1 + append -> query batch 2
-    (which RE-CRAWLS some ids with changed content) + append -> the
-    maintained state must equal a from-scratch rebuild on the
-    latest-version union. Pins three contracts at once: the
-    ``.write.mode("append")`` increment (minhash_append), latest-wins
-    supersede on read (minhash_load), and the pair-set maintenance rule
-    (drop pairs touching re-crawled ids, add the incremental pairs)."""
-    from usajobs_etl_service_spark.operators.neardup import (
-        minhash_append,
-        minhash_compact,
-        minhash_incremental_pairs,
-        minhash_load,
-        minhash_pairs_from_sigs,
-        minhash_write,
-    )
-
-    docs = read_table(spark, "/root/testdata/sf0.01", "documents")
-    base = docs.filter(F.col("doc_id") % 4 < 2)
-    batch1 = docs.filter(F.col("doc_id") % 4 == 2)
-    # batch 2: new ids, plus re-crawls of base/batch1 ids with CHANGED text
-    recrawl = docs.filter((F.col("doc_id") % 4 < 3) & (F.col("doc_id") % 7 == 1)).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" revised in second crawl"))
-    )
-    batch2 = docs.filter(F.col("doc_id") % 4 == 3).unionByName(recrawl)
-    recrawled_ids = {r["doc_id"] for r in recrawl.select("doc_id").collect()}
-
-    path = str(tmp_path / "sigs")
-    minhash_write(base, path)
-    pairs0 = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_pairs_from_sigs(minhash_load(spark, path), threshold=0.8).collect()
-    }
-    inc1 = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_incremental_pairs(batch1, minhash_load(spark, path), threshold=0.8).collect()
-    }
-    minhash_append(batch1, path, batch_seq=1)
-    inc2 = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_incremental_pairs(batch2, minhash_load(spark, path), threshold=0.8).collect()
-    }
-    minhash_append(batch2, path, batch_seq=2)
-
-    # from-scratch ground truth on the latest-version union
-    latest = (
-        base.unionByName(batch1)
-        .filter(~F.col("doc_id").isin(list(recrawled_ids)))
-        .unionByName(batch2)
-    )
-    want = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_near_dup_pairs(latest, threshold=0.8).collect()
-    }
-    assert want, "ground truth empty — test data lost its planted dups"
-
-    # contract 1: the appended+superseded table answers like a rebuild
-    stored = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_pairs_from_sigs(minhash_load(spark, path), threshold=0.8).collect()
-    }
-    assert stored == want
-
-    # contract 2: incremental pair maintenance converges to the rebuild
-    maintained = {
-        p for p in (pairs0 | inc1) if p[0] not in recrawled_ids and p[1] not in recrawled_ids
-    } | inc2
-    assert maintained == want
-
-    # contract 3: compaction preserves answers (and drops batch_seq)
-    minhash_compact(spark, path, str(tmp_path / "sigs_compact"))
-    compacted = minhash_load(spark, str(tmp_path / "sigs_compact"))
-    assert compacted.columns == ["id", "sig"]
-    got = {
-        (r["id_a"], r["id_b"], r["est_jaccard"])
-        for r in minhash_pairs_from_sigs(compacted, threshold=0.8).collect()
-    }
-    assert got == want
-
-
-def test_incremental_supersedes_recrawled_ids(spark, tmp_path):
-    """A re-crawled id (in both the stored table and the new batch)
-    must not produce self-pairs or verify-join fanout: the batch's
-    version supersedes the stored row."""
-    from usajobs_etl_service_spark.operators.neardup import (
-        minhash_incremental_pairs,
-        minhash_load,
-        minhash_write,
-    )
-
-    docs = read_table(spark, "/root/testdata/sf0.01", "documents")
-    old = docs.filter(F.col("doc_id") % 4 != 0)
-    # the batch re-crawls some old ids (content unchanged) plus new ones
-    new = docs.filter((F.col("doc_id") % 4 == 0) | (F.col("doc_id") % 7 == 0))
-    minhash_write(old, str(tmp_path / "sigs"))
-    sigs = minhash_load(spark, str(tmp_path / "sigs"))
-    rows = minhash_incremental_pairs(new, sigs, threshold=0.8).collect()
-    assert all(r["id_a"] != r["id_b"] for r in rows)
-    seen = [(r["id_a"], r["id_b"]) for r in rows]
-    assert len(seen) == len(set(seen)), "verify-join fanout duplicated pairs"
-    full = {
-        (r["id_a"], r["id_b"])
-        for r in minhash_near_dup_pairs(docs, threshold=0.8).collect()
-    }
-    newset = {r["doc_id"] for r in new.select("doc_id").collect()}
-    want = {(a, b) for a, b in full if a in newset or b in newset}
-    assert set(seen) == want

@@ -175,62 +175,6 @@ def test_store_roundtrip_equals_inline(spark, vecs, tmp_path):
     assert got == want
 
 
-def test_store_append_latest_wins_and_compact(spark, tmp_path):
-    """Re-embedded ids resolve latest-wins by batch_seq (base rows read
-    as NULL = oldest); compact folds to a windowless base with
-    identical content — the minhash/winnow store contract."""
-    from usajobs_etl_service_spark.operators.quantize import (
-        quantize_compact,
-        quantize_load,
-        quantize_write,
-    )
-
-    base = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 2.0]), (3, [3.0, 3.0])],
-        "vec_id long, embedding array<double>",
-    )
-    path = str(tmp_path / "store_inc")
-    quantize_write(base, path)
-    from usajobs_etl_service_spark.operators.quantize import quantize_append
-
-    # batch 1 re-embeds id 2 and adds id 4; batch 2 re-embeds id 2 again
-    quantize_append(
-        spark.createDataFrame(
-            [(2, [0.5, 0.5]), (4, [4.0, 0.0])],
-            "vec_id long, embedding array<double>",
-        ),
-        path,
-        batch_seq=1,
-    )
-    quantize_append(
-        spark.createDataFrame([(2, [9.0, 0.0])], "vec_id long, embedding array<double>"),
-        path,
-        batch_seq=2,
-    )
-    latest = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [9.0, 0.0]), (3, [3.0, 3.0]), (4, [4.0, 0.0])],
-        "vec_id long, embedding array<double>",
-    )
-    want = sorted(
-        (r["vec_id"], tuple(r["qvec"]), r["scale"])
-        for r in quantize_embeddings_int8(latest).collect()
-    )
-    got = sorted(
-        (r["id"], tuple(r["qvec"]), r["scale"])
-        for r in quantize_load(spark, path).collect()
-    )
-    assert got == want
-    compacted = str(tmp_path / "store_compacted")
-    quantize_compact(spark, path, compacted)
-    cdf = spark.read.parquet(compacted)
-    assert "batch_seq" not in cdf.columns
-    got_c = sorted(
-        (r["id"], tuple(r["qvec"]), r["scale"])
-        for r in quantize_load(spark, compacted).collect()
-    )
-    assert got_c == want
-
-
 def test_quantized_topk_probe_matches_dequantized_and_plans_clean(spark):
     """Asymmetric store probe (float query x int8 codes, shortlist +
     dequantized re-rank) selects the same ids as brute-force cosine
@@ -373,7 +317,7 @@ def test_quantized_ivf_persists_and_prunes_partitions(spark, tmp_path):
     and a probe over the PERSISTED index prunes non-probed buckets at
     PLANNING time — the isin filter must surface as a partition filter
     on the partitioned read, so (C - nprobe)/C of the index is never
-    opened."""
+    opened. Degenerate probe arguments (nprobe or k below 1) raise."""
     from usajobs_etl_service_spark.operators.quantize import (
         quantized_ivf_build,
         quantized_ivf_topk_cosine,
@@ -403,86 +347,8 @@ def test_quantized_ivf_persists_and_prunes_partitions(spark, tmp_path):
     import re
 
     assert re.search(r"PartitionFilters: \[[^\]]*centroid_id", plan), plan[:1500]
-
-
-def test_quantized_ivf_append_frozen_codebook(spark, tmp_path):
-    """Incremental composite: appending a batch against the FROZEN
-    stored codebook equals rebuilding the index over the union corpus
-    with the same centroids — probes see old+new immediately, and a
-    float ivf_write index is rejected (schema guard)."""
-    from usajobs_etl_service_spark.operators.quantize import (
-        quantized_ivf_append,
-        quantized_ivf_build,
-        quantized_ivf_topk_cosine,
-    )
-    from usajobs_etl_service_spark.operators.similarity import ivf_load, ivf_write
-    from usajobs_etl_service_spark.session import read_table
-
-    emb = read_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    corpus = emb.filter(F.col("vec_id") != 0)
-    base = corpus.filter(F.col("vec_id") % 2 == 0)
-    batch = corpus.filter(F.col("vec_id") % 2 == 1)
-    index, cents = quantized_ivf_build(base, n_centroids=8)
-    path = str(tmp_path / "qivf_inc")
-    ivf_write(index, cents, path)
-    quantized_ivf_append(batch, path)
-    idx2, cents2 = ivf_load(spark, path)
-    got = quantized_ivf_topk_cosine(idx2, cents2, qvec, k=15, nprobe=8)
-    # reference: full-probe flat ranking over the WHOLE corpus (full
-    # probe is bucket-independent, so frozen-codebook assignment of the
-    # appended half cannot change it)
-    from usajobs_etl_service_spark.operators.quantize import quantized_topk_cosine
-
-    want = quantized_topk_cosine(
-        quantize_embeddings_int8(corpus).select(
-            F.col("vec_id").alias("id"), "qvec", "scale"
-        ),
-        qvec,
-        k=15,
-    )
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-    # schema guard: a float index is refused
-    fpath = str(tmp_path / "float_ivf")
-    from usajobs_etl_service_spark.operators.similarity import ivf_build
-
-    fidx, fcents = ivf_build(base, n_centroids=4)
-    ivf_write(fidx, fcents, fpath)
-    with pytest.raises(ValueError, match="float ivf_write index"):
-        quantized_ivf_append(batch, fpath)
-
-
-def test_quantized_ivf_append_rejects_type_drift_and_bad_nprobe(spark, tmp_path):
-    """Round-10 review (verified corruption): parquet mode('append')
-    happily lands mixed-schema files — a string-id batch appended to a
-    long-id index makes every later load/probe die unreadably. The
-    append must raise BEFORE writing; nprobe < 1 must raise instead of
-    silently probing nothing."""
-    from usajobs_etl_service_spark.operators.quantize import (
-        quantized_ivf_append,
-        quantized_ivf_build,
-        quantized_ivf_topk_cosine,
-    )
-    from usajobs_etl_service_spark.operators.similarity import ivf_load, ivf_write
-
-    base = spark.createDataFrame(
-        [(i, [float(i), 1.0]) for i in range(1, 40)],
-        "vec_id long, embedding array<double>",
-    )
-    index, cents = quantized_ivf_build(base, n_centroids=4)
-    path = str(tmp_path / "qivf_types")
-    ivf_write(index, cents, path)
-    bad = spark.createDataFrame(
-        [("x1", [9.0, 9.0])], "vec_id string, embedding array<double>"
-    )
-    with pytest.raises(ValueError, match="mixed-schema"):
-        quantized_ivf_append(bad, path)
-    # nothing was written: the index still loads and probes cleanly
-    idx2, cents2 = ivf_load(spark, path)
-    assert idx2.count() == 39
+    # nprobe < 1 and k < 1 raise instead of silently probing nothing
     with pytest.raises(ValueError, match="nprobe"):
-        quantized_ivf_topk_cosine(idx2, cents2, [1.0, 0.0], k=5, nprobe=0)
+        quantized_ivf_topk_cosine(idx2, cents2, qvec, k=5, nprobe=0)
     with pytest.raises(ValueError, match="k must"):
-        quantized_ivf_topk_cosine(idx2, cents2, [1.0, 0.0], k=0)
+        quantized_ivf_topk_cosine(idx2, cents2, qvec, k=0)

@@ -169,3 +169,9 @@ class TestScanToDataFrame:
         src = _source(paged_transport([]))
         df = scan_to_dataframe(spark, src, "data", spool_dir=str(tmp_path / "spool"))
         assert df.count() == 0
+        # an empty scan has the same columns and types as a non-empty one
+        full = scan_to_dataframe(
+            spark, _source(paged_transport([make_page(2, 0, 2)])), "data",
+            spool_dir=str(tmp_path / "spool_full"),
+        )
+        assert df.schema == full.schema

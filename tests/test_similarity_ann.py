@@ -125,51 +125,3 @@ def test_ivf_persisted_probe_prunes_partitions(spark, sf_dir, tmp_path):
     # 3 of 8 partition directories read
     scan_line = [l for l in plan.splitlines() if "PartitionFilters" in l][0]
     assert "centroid_id" in scan_line
-
-
-def test_ivf_append_frozen_codebook(spark, sf_dir, tmp_path):
-    """Incremental ANN increment (the minhash_append analog): append a
-    new batch against the stored codebook — full probe over the
-    appended index must equal exact top-k over the union, and the new
-    rows must land inside the partitioned layout (pruning intact)."""
-    from usajobs_etl_service_spark.operators.similarity import ivf_append, ivf_load, ivf_write
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    qvec = [float(x) for x in emb.filter(F.col("vec_id") == 0).first()["embedding"]]
-    rest = emb.filter(F.col("vec_id") != 0)
-    first = rest.filter(F.col("vec_id") % 2 == 0)
-    second = rest.filter(F.col("vec_id") % 2 == 1)
-
-    index, cents = ivf_build(first, n_centroids=8)
-    path = str(tmp_path / "ivf")
-    ivf_write(index, cents, path)
-    ivf_append(second, path)
-
-    lindex, lcents = ivf_load(spark, path)
-    assert lindex.count() == rest.count()  # every appended row present
-    exact = {r["vec_id"] for r in topk_cosine(rest, qvec, k=10).collect()}
-    got = {r["vec_id"] for r in ivf_topk_cosine(lindex, lcents, qvec, k=10, nprobe=8).collect()}
-    assert got == exact  # full probe == exact over old+new
-    # appended rows live under existing centroid_id= partition dirs
-    import pathlib
-
-    parts = {p.name for p in pathlib.Path(path, "index").iterdir() if p.is_dir()}
-    assert parts and all(p.startswith("centroid_id=") for p in parts)
-
-
-def test_ivf_append_schema_mismatch_raises(spark, sf_dir, tmp_path):
-    """ADVICE r5 (low): appending a batch whose schema differs from the
-    stored index must raise — parquet mode('append') would otherwise
-    land mixed-schema files that a plain ivf_load reads inconsistently."""
-    import pytest
-
-    from usajobs_etl_service_spark.operators.similarity import ivf_append, ivf_write
-
-    emb = read_table(spark, sf_dir, "embeddings")
-    index, cents = ivf_build(emb, n_centroids=4)
-    path = str(tmp_path / "ivf_schema")
-    ivf_write(index, cents, path)
-    with pytest.raises(ValueError, match="schema"):
-        ivf_append(emb.drop("label"), path)
-    with pytest.raises(ValueError, match="schema"):
-        ivf_append(emb.withColumn("extra", F.lit(1)), path)

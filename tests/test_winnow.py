@@ -182,64 +182,3 @@ def test_winnow_matches_python_reference_on_random_docs(spark):
         got.setdefault(r["id"], set()).add(r["fp"])
     for doc_id, text in docs:
         assert got.get(doc_id, set()) == ref_fps(text), (doc_id, text[:40])
-
-
-def test_winnow_persisted_append_load_equivalence(spark, tmp_path):
-    """The build-once/append contract (minhash_write/append/load's
-    shape): base + appended batches, with a re-crawled doc whose text
-    CHANGED in the later batch, must load to exactly the fingerprints
-    of a from-scratch run over the latest corpus version; pairs from
-    the persisted table must equal winnow_candidate_pairs."""
-    from usajobs_etl_service_spark.operators.winnow import (
-        winnow_append,
-        winnow_compact,
-        winnow_load,
-        winnow_pairs_from_fps,
-        winnow_write,
-    )
-
-    rng = random.Random(21)
-    base_rows = [(i, _words(rng, 30, POOL)) for i in range(6)]
-    new_rows = [(i, _words(rng, 30, POOL)) for i in range(6, 10)]
-    # doc 3 re-crawled with entirely new text in batch 2
-    recrawl = [(3, _words(rng, 25, POOL))]
-    path = str(tmp_path / "fps")
-
-    winnow_write(_docs(spark, base_rows), path)
-    winnow_append(_docs(spark, new_rows), path, batch_seq=1)
-    winnow_append(_docs(spark, recrawl), path, batch_seq=2)
-
-    latest_corpus = [r for r in base_rows if r[0] != 3] + new_rows + recrawl
-    want = {
-        (r["id"], r["fp"])
-        for r in winnow_fingerprints(_docs(spark, latest_corpus)).collect()
-    }
-    got = {(r["id"], r["fp"]) for r in winnow_load(spark, path).collect()}
-    assert got == want
-    # the old version of doc 3 must be fully gone
-    old3 = {
-        r["fp"]
-        for r in winnow_fingerprints(_docs(spark, [base_rows[3]])).collect()
-    }
-    new3 = {r[1] for r in got if r[0] == 3}
-    assert new3 != old3
-
-    # pairs from the persisted table == pairs from scratch
-    p_want = {
-        (r["id_a"], r["id_b"], r["shared_fps"])
-        for r in winnow_candidate_pairs(
-            _docs(spark, latest_corpus), min_shared=1
-        ).collect()
-    }
-    p_got = {
-        (r["id_a"], r["id_b"], r["shared_fps"])
-        for r in winnow_pairs_from_fps(winnow_load(spark, path), min_shared=1).collect()
-    }
-    assert p_got == p_want
-
-    # compact folds to a window-free base: same content, no batch_seq
-    dst = str(tmp_path / "fps_compact")
-    winnow_compact(spark, path, dst)
-    compacted = spark.read.parquet(dst)
-    assert "batch_seq" not in compacted.columns
-    assert {(r["id"], r["fp"]) for r in compacted.collect()} == want

@@ -12,10 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# Whitespace tokenizer + a BPE-ish word/punct splitter.
+# Whitespace tokenizer.
 _WS = r"\s+"
-# split points: whitespace, or boundaries between word chars and non-word chars
-_BPEISH = r"\s+|(?<=\W)(?=\w)|(?<=\w)(?=\W)"
 
 
 def tokens_ws(col: Column) -> Column:
@@ -26,12 +24,6 @@ def tokens_ws(col: Column) -> Column:
 def token_count_ws(col: Column) -> Column:
     """Whitespace token count."""
     return F.size(tokens_ws(col))
-
-
-def token_count_bpeish(col: Column) -> Column:
-    """BPE-ish token count: words and punctuation runs count separately —
-    a cheap, deterministic proxy for a subword tokenizer's token count."""
-    return F.size(F.filter(F.split(F.trim(col), _BPEISH), lambda t: t != ""))
 
 
 def char_count(col: Column) -> Column:
@@ -437,12 +429,6 @@ def fingerprint_md5(col: Column) -> Column:
     """Exact-dup fingerprint: md5 hex of normalized text (md5 matches
     DuckDB's md5() for oracle checks)."""
     return F.md5(normalized_text(col))
-
-
-def fingerprint_xx64(col: Column) -> Column:
-    """64-bit content fingerprint (xxhash64 — fast, JVM-side); use for
-    shuffle keys where a cryptographic hash is overkill."""
-    return F.xxhash64(normalized_text(col))
 
 
 def shingles_from_tokens(toks: Column, k: int = 5) -> Column:

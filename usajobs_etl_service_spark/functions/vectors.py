@@ -56,13 +56,3 @@ def l2_normalize(a: Column) -> Column:
         F.array_repeat(norm(a), F.size(a)),
         lambda x, n: F.try_divide(x, n),
     )
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-    )

@@ -186,70 +186,18 @@ def minhash_write(
 ) -> None:
     """Persist the MinHash signature table as a build-once artifact
     (the IVF-index pattern, similarity.ivf_write): signatures are a
-    pure function of the corpus and are reused across LSH band
-    configs, thresholds, and incremental runs — at 100 TB the
-    signature scan is the expensive stage and should be paid once, not
-    per near-dup query."""
+    pure function of the corpus and are reused across LSH band configs
+    and thresholds — at 100 TB the signature scan is the expensive
+    stage and should be paid once, not per near-dup query."""
     minhash_signatures_df(
         df, id_col=id_col, text_col=text_col, num_hashes=num_hashes, shingle_k=shingle_k, seed=seed
     ).write.mode("overwrite").parquet(path)
 
 
-def minhash_append(
-    df: DataFrame,
-    path: str,
-    *,
-    batch_seq: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 128,
-    shingle_k: int = 5,
-    seed: int = 42,
-) -> None:
-    """Append one crawl batch's signatures to a persisted table — the
-    increment that completes ``minhash_incremental_pairs``. Append-only
-    (no rewrite of the 100 TB base): rows carry a monotone ``batch_seq``
-    and ``minhash_load`` resolves re-crawled ids latest-wins on read.
-    Base files written by ``minhash_write`` lack the column and read as
-    NULL = oldest. Fold batches into a new base with ``minhash_compact``
-    when the append tail grows."""
-    minhash_signatures_df(
-        df, id_col=id_col, text_col=text_col, num_hashes=num_hashes, shingle_k=shingle_k, seed=seed
-    ).withColumn("batch_seq", F.lit(int(batch_seq))).write.mode("append").parquet(path)
-
-
 def minhash_load(spark, path: str) -> DataFrame:
-    """Load a persisted signature table (columns: id, sig). If the table
-    has appended batches (``minhash_append``), re-crawled ids are
-    resolved latest-wins by ``batch_seq`` — one window shuffle on id,
-    only paid when appends exist; a compacted or write-once table reads
-    straight through. Ties on (id, batch_seq) — a duplicate id inside
-    one append batch, or within the base where batch_seq is NULL — are
-    broken by signature-content hash, so the loaded table is
-    DETERMINISTIC even when the unique-id-per-batch precondition is
-    violated (row_number alone would pick whichever row the shuffle
-    delivered first)."""
-    sigs = spark.read.option("mergeSchema", "true").parquet(path)
-    if "batch_seq" not in sigs.columns:
-        return sigs
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy(
-        F.desc_nulls_last("batch_seq"), F.xxhash64(F.col("sig")).asc()
-    )
-    return (
-        sigs.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("id", "sig")
-    )
-
-
-def minhash_compact(spark, src_path: str, dst_path: str) -> None:
-    """Fold an appended signature table into a fresh write-once base at
-    ``dst_path`` (latest version per id, no ``batch_seq`` column), so
-    subsequent loads skip the latest-wins window. Writes to a NEW path:
-    rewriting a path Spark is lazily reading from is not safe."""
-    minhash_load(spark, src_path).write.mode("overwrite").parquet(dst_path)
+    """Load a signature table persisted by ``minhash_write`` (columns:
+    id, sig)."""
+    return spark.read.parquet(path)
 
 
 def minhash_pairs_from_sigs(
@@ -297,96 +245,6 @@ def minhash_pairs_from_sigs(
     ).dropDuplicates(["id_a", "id_b"])
     sa = sigs.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
     sb = sigs.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
-    return (
-        pairs.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn("est_jaccard", F.round(signature_similarity(F.col("sig_a"), F.col("sig_b")), 4))
-        # barrier: a plain filter gets the 128-lane signature fold
-        # substituted into the Filter condition (PushDownPredicates),
-        # re-evaluating it per row on top of the projection
-        .transform(lambda d: barrier_filter(d, F.col("est_jaccard") >= threshold))
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
-def minhash_incremental_pairs(
-    new_docs: DataFrame,
-    sigs: DataFrame,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 128,
-    bands: int = 32,
-    shingle_k: int = 5,
-    threshold: float = 0.8,
-    max_bucket: int = 1000,
-    seed: int = 42,
-) -> DataFrame:
-    """Near-dup pairs INVOLVING a new batch: the incremental-crawl
-    shape. Signatures are computed for ``new_docs`` only; the existing
-    corpus contributes its persisted signature table (``minhash_load``)
-    — the 100 TB corpus is never re-scanned, re-hashed, or carried
-    through the banded shuffle (ids only). Returns (id_a, id_b,
-    est_jaccard) pairs where AT LEAST ONE side is new (new-vs-corpus
-    and new-vs-new); corpus-vs-corpus pairs are already known from the
-    previous run and are excluded by a bucket-level filter before
-    anything quadratic happens. Append the new signatures to the
-    stored table afterwards (``.write.mode("append")``) to complete
-    the increment.
-
-    The new batch's signature aggregate appears in three plan subtrees
-    (banding + both verify-join sides) and is recomputed in each — by
-    construction the increment is small relative to the corpus, so
-    this is the right trade against materializing it; persist the new
-    batch's signatures first and pass a loaded table if it is not.
-
-    Re-crawled ids (present in both the batch and the stored table)
-    are superseded: the stored row is anti-joined out, so the batch's
-    content wins — without this, a duplicated id would emit self-pairs
-    and fan out the verify join."""
-    from pyspark.sql import Window
-
-    new_sigs = minhash_signatures_df(
-        new_docs, id_col=id_col, text_col=text_col, num_hashes=num_hashes,
-        shingle_k=shingle_k, seed=seed,
-    )
-    stored = sigs.join(new_sigs.select("id"), "id", "left_anti")
-    tagged = stored.select("id", "sig", F.lit(False).alias("is_new")).unionByName(
-        new_sigs.select("id", "sig", F.lit(True).alias("is_new"))
-    )
-    rows_per_band = num_hashes // bands
-    banded = tagged.select(
-        "id",
-        "is_new",
-        F.explode(lsh_band_keys(F.col("sig"), bands, rows_per_band)).alias("bk"),
-    ).select("id", "is_new", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
-    w = Window.partitionBy("band", "key")
-    banded = (
-        banded.withColumn("n", F.count(F.lit(1)).over(w))
-        .withColumn("n_new", F.sum(F.col("is_new").cast("int")).over(w))
-        # same drop counters as _cap_buckets (inline because this path
-        # also carries the bucket-level new-member count)
-        .observe("minhash_incr_lsh_cap", *_cap_drop_metrics(max_bucket))
-        .filter(F.col("n").between(2, max_bucket) & (F.col("n_new") > 0))
-        .drop("n", "n_new")
-    )
-    buckets = banded.groupBy("band", "key").agg(
-        F.array_sort(F.collect_list(F.struct("id", "is_new"))).alias("ms")
-    )
-    lhs = buckets.select(F.posexplode("ms").alias("i", "x"), "ms")
-    pairs = (
-        lhs.select(
-            F.col("x.id").alias("id_a"),
-            F.col("x.is_new").alias("new_a"),
-            F.explode(F.slice(F.col("ms"), F.col("i") + F.lit(2), F.size("ms"))).alias("y"),
-        )
-        .select("id_a", "new_a", F.col("y.id").alias("id_b"), F.col("y.is_new").alias("new_b"))
-        .filter(F.col("new_a") | F.col("new_b"))
-        .select("id_a", "id_b")
-        .dropDuplicates(["id_a", "id_b"])
-    )
-    sa = tagged.select(F.col("id").alias("id_a"), F.col("sig").alias("sig_a"))
-    sb = tagged.select(F.col("id").alias("id_b"), F.col("sig").alias("sig_b"))
     return (
         pairs.join(sa, "id_a")
         .join(sb, "id_b")
@@ -800,11 +658,6 @@ def simhash_near_dup_pairs(
 # ---------------------------------------------------------------------------
 # n-gram Jaccard
 # ---------------------------------------------------------------------------
-
-def ngram_set(text_col: Column, n: int = 3) -> Column:
-    """Distinct word n-grams of normalized text."""
-    return F.array_distinct(shingles(text_col, n))
-
 
 def jaccard(set_a: Column, set_b: Column) -> Column:
     """Exact Jaccard over two array-sets (built-in intersect/union)."""

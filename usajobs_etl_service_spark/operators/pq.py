@@ -269,11 +269,11 @@ def pq_search_rerank(
 
 # ---------------------------------------------------------------------------
 # Persisted PQ artifact: the build-once / probe-many deployment shape
-# (mirrors ivf_write / ivf_load / ivf_append and minhash_write /
-# minhash_append). At 100 TB the codes table — (id, codes array<int>),
-# ~1/16th the raw vector bytes — is what lives on disk; training and
-# encoding are paid at build/append time, and a probe touches ONLY the
-# codes parquet plus the O(m*k) driver-side codebooks.
+# (mirrors ivf_write / ivf_load and minhash_write / minhash_load). At
+# 100 TB the codes table — (id, codes array<int>), ~1/16th the raw
+# vector bytes — is what lives on disk; training and encoding are paid
+# once at build time, and a probe touches ONLY the codes parquet plus
+# the O(m*k) driver-side codebooks.
 # ---------------------------------------------------------------------------
 
 def _load_codebooks(spark, path: str) -> Codebooks:
@@ -308,161 +308,6 @@ def pq_write(codes_df: DataFrame, codebooks: Codebooks, path: str) -> None:
 
 
 def pq_load(spark, path: str) -> tuple[DataFrame, Codebooks]:
-    """(codes DataFrame, codebooks) from a ``pq_write``/``pq_append``
-    artifact. The codes table stays lazy; only the codebooks collect."""
+    """(codes DataFrame, codebooks) from a ``pq_write`` artifact. The
+    codes table stays lazy; only the codebooks collect."""
     return spark.read.parquet(f"{path}/codes"), _load_codebooks(spark, path)
-
-
-def pq_append(
-    df: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    embedding_col: str = "embedding",
-) -> None:
-    """Append new vectors to a persisted PQ index with FROZEN codebooks
-    — the incremental-crawl increment (mirrors ``ivf_append``): the
-    stored codebooks are loaded, the batch is encoded with the same
-    scan-stage argmin projection the build used, and the code rows land
-    with ``mode("append")``. Codebooks do not drift with appends;
-    retrain (``pq_train_kmeans`` + ``pq_write``) if the vector
-    distribution moves. The encoded batch schema is validated against
-    the stored codes first — parquet append happily lands mixed-schema
-    files that a later read would surface as corruption."""
-    spark = df.sparkSession
-    books = _load_codebooks(spark, path)
-    encoded = pq_encode(df, books, id_col=id_col, embedding_col=embedding_col)
-    stored = spark.read.parquet(f"{path}/codes")
-    if [f.simpleString() for f in encoded.schema.fields] != [
-        f.simpleString() for f in stored.schema.fields
-    ]:
-        raise ValueError(
-            f"append schema {encoded.schema.simpleString()} != stored codes "
-            f"schema {stored.schema.simpleString()}"
-        )
-    encoded.write.mode("append").parquet(f"{path}/codes")
-
-
-# ---------------------------------------------------------------------------
-# IVF + PQ composition (FAISS-style IVFPQ): coarse quantizer prunes WHICH
-# partitions a probe reads, residual PQ shrinks WHAT each partition stores.
-# ---------------------------------------------------------------------------
-
-def ivfpq_build(
-    df: DataFrame,
-    *,
-    n_centroids: int = 16,
-    m: int = 16,
-    k: int = 16,
-    id_col: str = "vec_id",
-    embedding_col: str = "embedding",
-    seed: int = 42,
-):
-    """Build an IVF-PQ index: IVF coarse assignment (similarity.ivf_build
-    — literal-centroid argmax projection), then PQ codebooks trained on
-    RESIDUALS (x - assigned centroid, the Jegou et al. §IV.B refinement:
-    residuals are centered and low-energy, so k centroids/subspace go
-    much further than on raw vectors).
-
-    Returns (codes_df, centroids_df, codebooks): codes_df carries
-    (id, centroid_id, codes) — at scale, persist it partitioned by
-    ``centroid_id`` exactly like the flat IVF index (ivf_write), at
-    m bytes/vector instead of 4*D. The residual subtraction joins the
-    broadcast C-row centroid table once at build time."""
-    from usajobs_etl_service_spark.operators.similarity import ivf_build
-
-    index, cents = ivf_build(
-        df, n_centroids=n_centroids, embedding_col=embedding_col, id_col=id_col, seed=seed
-    )
-    resid = index.join(F.broadcast(cents), "centroid_id").select(
-        F.col(id_col),
-        "centroid_id",
-        F.zip_with(
-            F.col(embedding_col).cast("array<double>"), F.col("cv"), lambda a, b: a - b
-        ).alias("__resid"),
-    )
-    books = pq_train_kmeans(
-        resid, m=m, k=k, embedding_col="__resid", seed=seed
-    )
-    codes = pq_encode(resid, books, id_col=id_col, embedding_col="__resid").join(
-        resid.select(id_col, "centroid_id"), id_col
-    )
-    return codes, cents, books
-
-
-def ivfpq_probe(
-    codes_df: DataFrame,
-    centroids_df: DataFrame,
-    codebooks: Codebooks,
-    query: list[float],
-    *,
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """ADC top-k over the ``nprobe`` nearest coarse cells only. Each
-    probed cell gets its OWN driver-side lookup table (the query
-    residual q - centroid_c differs per cell); the per-cell scans union
-    — on a centroid_id-partitioned store each branch is a pruned
-    partition read, so probe cost ~ nprobe/C of the codes table. The
-    ADC distance approximates ||q - x||^2 = ||(q - c) - r_x||^2 via
-    r_x's quantization. Recall is set by nprobe and k (codebook size);
-    re-rank a shortlist against raw vectors for the deployed shape
-    (pq_search_rerank)."""
-    cents = {r["centroid_id"]: [float(x) for x in r["cv"]] for r in centroids_df.collect()}
-    qs = {
-        cid: sum((a - b) * (a - b) for a, b in zip(query, cv)) for cid, cv in cents.items()
-    }
-    probe_ids = sorted(sorted(qs, key=lambda c: (qs[c], c))[:nprobe])
-    branches = []
-    for cid in probe_ids:
-        cv = cents[cid]
-        q_resid = [a - b for a, b in zip(query, cv)]
-        branch = pq_adc_distances(
-            codes_df.filter(F.col("centroid_id") == cid),
-            q_resid,
-            codebooks,
-            id_col=id_col,
-        )
-        branches.append(branch)
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out.orderBy(F.col("adc_dist").asc(), F.col(id_col).asc()).limit(k)
-
-
-def ivfpq_search_rerank(
-    codes_df: DataFrame,
-    vectors_df: DataFrame,
-    centroids_df: DataFrame,
-    codebooks: Codebooks,
-    query: list[float],
-    *,
-    k: int = 10,
-    nprobe: int = 4,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-    embedding_col: str = "embedding",
-) -> DataFrame:
-    """Deployed IVF-PQ probe: ADC shortlist from the probed cells, then
-    exact squared-L2 re-rank of shortlist ids against the raw vectors
-    (broadcast semi-join — raw floats are read for ``shortlist`` rows
-    only). For i.i.d. high-dim data the true-NN distance gaps are
-    smaller than PQ quantization noise, so the shortlist, not the raw
-    ADC ranking, is what carries recall — same law as pq_search_rerank."""
-    short = ivfpq_probe(
-        codes_df, centroids_df, codebooks, query, k=shortlist, nprobe=nprobe, id_col=id_col
-    ).select(id_col)
-    qlit = F.array(*[F.lit(float(x)) for x in query])
-    vec = F.col(embedding_col).cast("array<double>")
-    exact = F.aggregate(
-        F.zip_with(vec, qlit, lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    return (
-        vectors_df.join(F.broadcast(short), id_col)
-        .select(F.col(id_col), exact.alias("l2sq"))
-        .orderBy(F.col("l2sq").asc(), F.col(id_col).asc())
-        .limit(k)
-    )

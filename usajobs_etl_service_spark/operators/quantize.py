@@ -112,25 +112,18 @@ def _quantize_staged(
     *,
     out_id: str,
     keep: tuple[str, ...] = (),
-    extra: dict[str, Column] | None = None,
 ) -> DataFrame:
     """ONE copy of the staging pipeline (cast -> scale fold -> code
-    transform) shared by the flat quantizer and both IVF-composite
-    paths (round-10 review: the boilerplate existed in three copies
-    even after `_qvec_expr` was extracted). Returns
-    ``(out_id, *keep, *extra, qvec, scale)``; ``extra`` columns are
-    computed on the staged frame (they may reference ``__v``)."""
+    transform) shared by the flat quantizer and the IVF composite, so
+    the two cannot drift. Returns ``(out_id, *keep, qvec, scale)``."""
     v = F.col(embedding_col).cast("array<double>")
     staged = df.select(
         F.col(id_col).alias(out_id), *keep, v.alias("__v")
     )
-    for name, expr in (extra or {}).items():
-        staged = staged.withColumn(name, expr)
     staged = staged.withColumn("__scale", _scale_expr(F.col("__v")))
     return staged.select(
         out_id,
         *keep,
-        *(extra or {}),
         _qvec_expr("__v", "__scale").alias("qvec"),
         F.col("__scale").alias("scale"),
     )
@@ -204,7 +197,7 @@ def quantization_error_report(
 
 # ---------------------------------------------------------------------------
 # Persisted quantized store — the build-once/probe-many contract the other
-# dedup/ANN families already have (neardup.minhash_write, winnow.winnow_write,
+# dedup/ANN families already have (neardup.minhash_write, pq.pq_write,
 # similarity.ivf_write): a 100 TB embedding corpus is quantized ONCE and every
 # probe reads only the compact (id, qvec, scale) table — 4x less IO than the
 # float corpus and no per-query re-quantization (the round-9 q188 shape, which
@@ -230,56 +223,10 @@ def quantize_write(
     ).write.mode("overwrite").parquet(path)
 
 
-def quantize_append(
-    df: DataFrame,
-    path: str,
-    *,
-    batch_seq: int,
-    id_col: str = "vec_id",
-    embedding_col: str = "embedding",
-) -> None:
-    """Append one re-embedding batch's codes — append-only, no rewrite
-    of the base (``minhash_append``'s contract). Rows carry a monotone
-    ``batch_seq``; ``quantize_load`` resolves re-embedded ids
-    latest-wins on read. Base files from ``quantize_write`` lack the
-    column and read as NULL = oldest. Fold the tail into a fresh base
-    with ``quantize_compact``."""
-    quantize_embeddings_int8(df, id_col=id_col, embedding_col=embedding_col).select(
-        F.col(id_col).alias("id"), "qvec", "scale"
-    ).withColumn("batch_seq", F.lit(int(batch_seq))).write.mode("append").parquet(path)
-
-
 def quantize_load(spark, path: str) -> DataFrame:
-    """Load a persisted int8 store (columns: id, qvec, scale). With
-    appended batches, each id keeps its LATEST row only — one id-keyed
-    window, paid only when appends exist (a write-once or compacted
-    table reads straight through). Ties on (id, batch_seq) — duplicate
-    ids within one batch or the NULL-seq base — break by content hash
-    of (qvec, scale), so the loaded store is deterministic even when
-    the unique-id-per-batch precondition is violated (the
-    ``minhash_load`` discipline)."""
-    q = spark.read.option("mergeSchema", "true").parquet(path)
-    if "batch_seq" not in q.columns:
-        return q
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("id").orderBy(
-        F.desc_nulls_last("batch_seq"),
-        F.xxhash64(F.col("qvec"), F.col("scale")).asc(),
-    )
-    return (
-        q.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") == 1)
-        .select("id", "qvec", "scale")
-    )
-
-
-def quantize_compact(spark, src_path: str, dst_path: str) -> None:
-    """Fold an appended store into a fresh write-once base at
-    ``dst_path`` (latest row per id, no batch_seq), so later loads skip
-    the latest-wins window. New path: rewriting a path Spark may be
-    lazily reading is not safe (the minhash_compact contract)."""
-    quantize_load(spark, src_path).write.mode("overwrite").parquet(dst_path)
+    """Load an int8 store persisted by ``quantize_write`` (columns: id,
+    qvec, scale)."""
+    return spark.read.parquet(path)
 
 
 def _check_probe_args(
@@ -484,86 +431,6 @@ def quantized_ivf_build(
         ),
         cent,
     )
-
-
-def quantized_ivf_append(
-    df: DataFrame,
-    path: str,
-    *,
-    id_col: str = "vec_id",
-    embedding_col: str = "embedding",
-) -> None:
-    """Append a new float batch to a PERSISTED quantized IVF index
-    (written via ``similarity.ivf_write``) with a FROZEN codebook —
-    the ``ivf_append`` contract for the int8-resident composite: the
-    existing index is never re-read or re-assigned; the batch is
-    centroid-assigned with the stored codebook (the same literal-
-    argmax projection the build uses), quantized through the shared
-    ``_qvec_expr``/``_scale_expr`` builders, and lands as new files
-    under the existing ``centroid_id=`` directories, so probes keep
-    planning-time pruning and see old+new immediately. The codebook
-    does not drift with appends; rebuild periodically if the vector
-    distribution moves. Appends assume NEW ids (parquet has no
-    row-level delete — replacing an id is a rebuild concern, unlike
-    the flat store's batch_seq latest-wins, which works because the
-    flat store is not partition-laid-out)."""
-    from usajobs_etl_service_spark.operators.similarity import (
-        nearest_centroid_expr,
-    )
-
-    spark = df.sparkSession
-    stored = spark.read.parquet(f"{path}/index").schema
-    want = {"id", "centroid_id", "qvec", "scale"}
-    if {f.name for f in stored.fields} != want:
-        raise ValueError(
-            "quantized_ivf_append targets a quantized index with columns "
-            f"{sorted(want)}; the stored index has "
-            f"{sorted(f.name for f in stored.fields)} — is this a float "
-            "ivf_write index? Use similarity.ivf_append for those."
-        )
-    cents = spark.read.parquet(f"{path}/centroids")
-    cent_rows = sorted(
-        ((r["centroid_id"], [float(x) for x in r["cv"]]) for r in cents.collect()),
-        key=lambda t: t[0],
-    )
-    new_index = _quantize_staged(
-        df,
-        id_col,
-        embedding_col,
-        out_id="id",
-        extra={"centroid_id": nearest_centroid_expr(F.col("__v"), cent_rows)},
-    )
-    # validate the BATCH-derived schema against the stored TYPES before
-    # any write (round-10 review, verified corruption: parquet
-    # mode("append") happily lands mixed-schema files — a string-id
-    # batch appended to a long-id index makes every later ivf_load/
-    # probe die with SchemaColumnConvertNotSupportedException, and the
-    # build-once artifact is unrecoverable short of file surgery; the
-    # qvec/scale types are fixed by construction, so the id is the
-    # column that can drift — ivf_append's guard, carried over)
-    # centroid_id is the partition DIRECTORY column: its type never
-    # lands in a data file (Spark re-infers it from path values on
-    # read), so only the in-file columns can drift
-    stored_types = {
-        f.name: f.dataType for f in stored.fields if f.name != "centroid_id"
-    }
-    new_types = {f.name: f.dataType for f in new_index.schema.fields}
-    mismatched = sorted(
-        c for c in stored_types if new_types.get(c) != stored_types[c]
-    )
-    if mismatched:
-        raise ValueError(
-            "quantized_ivf_append batch would land mixed-schema files: "
-            + "; ".join(
-                f"{c}: stored {stored_types[c].simpleString()} vs batch "
-                f"{new_types[c].simpleString()}"
-                for c in mismatched
-            )
-            + ". Appending would corrupt probes; cast the batch or rebuild."
-        )
-    new_index.repartition("centroid_id").write.partitionBy(
-        "centroid_id"
-    ).mode("append").parquet(f"{path}/index")
 
 
 def quantized_ivf_topk_cosine(

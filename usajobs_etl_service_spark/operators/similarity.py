@@ -189,60 +189,6 @@ def ivf_write(index: DataFrame, centroids: DataFrame, path: str) -> None:
     centroids.write.mode("overwrite").parquet(f"{path}/centroids")
 
 
-def ivf_append(
-    df: DataFrame,
-    path: str,
-    *,
-    embedding_col: str = "embedding",
-) -> None:
-    """Append new vectors to a persisted IVF index with a FROZEN
-    codebook — the incremental-crawl increment for ANN, mirroring
-    ``neardup.minhash_append``: the existing index is never re-read or
-    re-assigned. The stored O(C) codebook is loaded, the new batch is
-    assigned via the same literal-argmax projection the build uses
-    (scan-stage, no join/shuffle beyond the partition write), and the
-    rows land in the partitioned layout with ``mode("append")`` — new
-    files under existing ``centroid_id=`` directories, so probes keep
-    pruning at planning time and see old+new immediately. The codebook
-    does not drift with appends; re-run ``ivf_build`` periodically if
-    the vector distribution moves. Replacing an existing vec_id is a
-    rebuild concern (parquet has no row-level delete); appends assume
-    new ids.
-
-    The batch schema is validated against the stored index before any
-    write: parquet ``mode("append")`` happily lands mixed-schema files,
-    which a plain (no-mergeSchema) ``ivf_load`` would then read
-    inconsistently — silent probe corruption. A mismatch raises
-    instead."""
-    spark = df.sparkSession
-    stored = {
-        f.name: f.dataType
-        for f in spark.read.parquet(f"{path}/index").schema.fields
-        if f.name != "centroid_id"
-    }
-    batch = {f.name: f.dataType for f in df.schema.fields}
-    if batch != stored:
-        only_batch = sorted(set(batch) - set(stored))
-        only_stored = sorted(set(stored) - set(batch))
-        typediff = sorted(k for k in set(batch) & set(stored) if batch[k] != stored[k])
-        raise ValueError(
-            "ivf_append batch schema does not match the stored index "
-            f"(minus centroid_id): batch-only={only_batch}, "
-            f"index-only={only_stored}, type-mismatch={typediff}. "
-            "Appending would corrupt probes; align the batch columns or rebuild."
-        )
-    cents = spark.read.parquet(f"{path}/centroids")
-    cent_rows = sorted(
-        ((r["centroid_id"], [float(x) for x in r["cv"]]) for r in cents.collect()),
-        key=lambda t: t[0],
-    )
-    new_index = df.withColumn(
-        "centroid_id",
-        nearest_centroid_expr(_as_double_array(F.col(embedding_col)), cent_rows),
-    ).repartition("centroid_id")
-    new_index.write.partitionBy("centroid_id").mode("append").parquet(f"{path}/index")
-
-
 def ivf_load(spark, path: str) -> tuple[DataFrame, DataFrame]:
     """Load a persisted IVF index; probes via ``ivf_topk_cosine`` get
     partition pruning on ``centroid_id`` for free (the ``isin`` filter

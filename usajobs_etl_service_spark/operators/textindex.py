@@ -62,9 +62,3 @@ def search_all_terms(index: DataFrame, terms: list[str]) -> DataFrame:
         .filter(F.col("__nt") == len(norm))
         .select("doc_id")
     )
-
-
-def search_any_term(index: DataFrame, terms: list[str]) -> DataFrame:
-    """Disjunctive (OR) term query."""
-    norm = sorted({t.lower() for t in terms if t})
-    return index.filter(F.col("term").isin(norm)).select("doc_id").distinct()

@@ -1,4 +1,4 @@
-"""Sorts / limits / top-k — O1, O2 (SURVEY.md §2.6).
+"""Top-k — O1 (SURVEY.md §2.6).
 
 O1 (``ORDER BY created_at DESC LIMIT k``, reference init.sql:57,
 monitor.sh:54-55) must plan as ``TakeOrderedAndProject``: each partition
@@ -17,10 +17,3 @@ def top_k(df: DataFrame, order_col: str | Column, k: int, desc: bool = True) -> 
     """O1: top-k by a sort column — plans as TakeOrderedAndProject."""
     col = F.col(order_col) if isinstance(order_col, str) else order_col
     return df.orderBy(col.desc() if desc else col.asc()).limit(k)
-
-
-def full_sort(df: DataFrame, *cols: str) -> DataFrame:
-    """O2: deterministic full sort (reference test_integration.py:93,549).
-    Range-partition exchange + per-partition sort; at 100 TB this is the
-    operator to avoid unless output order is a requirement."""
-    return df.orderBy(*cols)

@@ -132,81 +132,6 @@ def winnow_fingerprints(
     return fps.dropDuplicates(["id", "fp"])
 
 
-def winnow_write(
-    df: DataFrame,
-    path: str,
-    *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 4,
-) -> None:
-    """Persist the winnowing fingerprint table as a build-once artifact
-    — the same contract as ``neardup.minhash_write`` (the IVF-index
-    pattern): fingerprints are a pure function of the corpus, and at
-    100 TB the tokenize/k-gram/window scan is the expensive stage —
-    pay it once, then every boilerplate screen re-reads a compact
-    ``(id, fp)`` columnar table instead of re-fingerprinting."""
-    winnow_fingerprints(df, id_col=id_col, text_col=text_col, k=k, w=w).write.mode(
-        "overwrite"
-    ).parquet(path)
-
-
-def winnow_append(
-    df: DataFrame,
-    path: str,
-    *,
-    batch_seq: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 4,
-    w: int = 4,
-) -> None:
-    """Append one crawl batch's fingerprints — append-only, no rewrite
-    of the base (``minhash_append``'s contract). Rows carry a monotone
-    ``batch_seq``; ``winnow_load`` resolves re-crawled ids latest-wins
-    on read (the new fingerprint SET replaces the old one wholesale —
-    set semantics, unlike minhash's single-signature row). Base files
-    from ``winnow_write`` lack the column and read as NULL = oldest.
-    Fold the tail into a fresh base with ``winnow_compact``."""
-    winnow_fingerprints(df, id_col=id_col, text_col=text_col, k=k, w=w).withColumn(
-        "batch_seq", F.lit(int(batch_seq))
-    ).write.mode("append").parquet(path)
-
-
-def winnow_load(spark, path: str) -> DataFrame:
-    """Load a persisted fingerprint table (columns: id, fp). With
-    appended batches, each id keeps the rows of its LATEST batch only
-    (one id-keyed window max — paid only when appends exist; a
-    write-once or compacted table reads straight through). An id whose
-    latest version appears in several batches with the same seq is
-    impossible by the monotone-seq contract; equal-seq duplicates
-    degrade to the union of their fingerprint sets (deterministic —
-    fp rows are value-keyed, unlike minhash's pick-one signature)."""
-    fps = spark.read.option("mergeSchema", "true").parquet(path)
-    if "batch_seq" not in fps.columns:
-        return fps
-    from pyspark.sql import Window
-
-    mx = F.max("batch_seq").over(Window.partitionBy("id"))
-    return (
-        fps.withColumn("__mx", mx)
-        # eqNullSafe: an id with ONLY base rows has max NULL and keeps
-        # them; base rows of a re-crawled id (NULL vs a real max) drop
-        .filter(F.col("batch_seq").eqNullSafe(F.col("__mx")))
-        .select("id", "fp")
-        .dropDuplicates(["id", "fp"])
-    )
-
-
-def winnow_compact(spark, src_path: str, dst_path: str) -> None:
-    """Fold an appended fingerprint table into a fresh write-once base
-    at ``dst_path`` (latest set per id, no batch_seq), so later loads
-    skip the latest-wins window. New path: rewriting a path Spark may
-    be lazily reading is not safe (the minhash_compact contract)."""
-    winnow_load(spark, src_path).write.mode("overwrite").parquet(dst_path)
-
-
 def winnow_pairs_from_fps(
     fps: DataFrame,
     *,
@@ -214,10 +139,9 @@ def winnow_pairs_from_fps(
     max_postings: int = 500,
     observation=None,
 ) -> DataFrame:
-    """Candidate pairs from a PERSISTED fingerprint table — identical
-    results to ``winnow_candidate_pairs`` on the same corpus (tested),
-    minus the fingerprint scan. The 100 TB query shape: band rows are
-    (fp, id) longs only."""
+    """Candidate pairs from a fingerprint table (``winnow_fingerprints``
+    output, columns id, fp) — the pairing half of
+    ``winnow_candidate_pairs``. Band rows are (fp, id) longs only."""
     keyed = fps.select(F.lit(0).alias("band"), F.col("fp").alias("key"), "id")
     capped = _cap_buckets(
         keyed, max_postings, metric_name="winnow_fp_cap", observation=observation

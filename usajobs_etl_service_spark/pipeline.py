@@ -124,8 +124,7 @@ class JobPipeline:
                     self.spark, self.source, self.config.keyword, self.config.location, spool_dir=spool
                 )
                 metrics.api_calls = self.source.api_calls
-                if "ingest_seq" in fresh.columns:
-                    fresh = dedup_first_wins(fresh, ["position_uri"], "ingest_seq")
+                fresh = dedup_first_wins(fresh, ["position_uri"], "ingest_seq")
                 metrics.jobs_extracted = fresh.count()
                 if metrics.jobs_extracted:
                     fresh_cols = fresh.drop("ingest_seq").withColumn(

@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark.operators.stats import summary_stats
-from usajobs_etl_service_spark.operators.topk import top_k
 
 
 def recent_job_postings(
@@ -59,15 +58,4 @@ def register_views(
     recent_job_postings(job_postings, ts_col=ts_col).createOrReplaceTempView("recent_job_postings")
     summary_stats(job_postings, org_col=org_col, dept_col=dept_col, ts_col=ts_col).createOrReplaceTempView(
         "job_statistics"
-    )
-
-
-def recent_top_k(df: DataFrame, k: int = 5, ts_col: str = "created_at") -> DataFrame:
-    """monitor.sh's recent-jobs probe (reference monitor.sh:47-56):
-    LEFT()-truncated display columns, newest k."""
-    return top_k(df, ts_col, k).select(
-        F.substring("position_title", 1, 50).alias("title"),  # F11
-        F.substring("position_location", 1, 30).alias("location"),
-        F.substring("organization_name", 1, 30).alias("organization"),
-        F.to_date(F.col(ts_col)).alias("date"),  # F10
     )

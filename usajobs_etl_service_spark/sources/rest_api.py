@@ -36,7 +36,6 @@ from collections.abc import Callable, Iterator
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from usajobs_etl_service_spark.sources.ingest import flatten_postings, parse_api_pages
 
@@ -204,12 +203,7 @@ def scan_to_dataframe(
     import tempfile
 
     spool = spool_dir or tempfile.mkdtemp(prefix="rest_spool_")
-    pages = spool_pages_to_json(source, spool, keyword, location)
-    if pages == 0:
-        from usajobs_etl_service_spark.schemas import JOB_POSTING_SCHEMA
-
-        empty = spark.createDataFrame([], JOB_POSTING_SCHEMA)
-        return empty.withColumn("ingest_seq", F.lit(None).cast("long")).drop("created_at", "updated_at")
+    spool_pages_to_json(source, spool, keyword, location)
     return read_spool(spark, spool)
 
 
