@@ -15,9 +15,9 @@ PACKAGE = ROOT / "usajobs_etl_service_spark"
 SEARCH = [PACKAGE, ROOT / "__spark_entry__.py", ROOT / "bench.py", ROOT / "tools", ROOT / "perfbench", ROOT / "tests"]
 
 
-def _py_files() -> list[Path]:
+def _py_files(roots: list[Path] = SEARCH) -> list[Path]:
     files: list[Path] = []
-    for p in SEARCH:
+    for p in roots:
         if p.is_file():
             files.append(p)
         else:

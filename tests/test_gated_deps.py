@@ -99,6 +99,7 @@ def test_delta_merge_real_path(tmp_path):
         pytest.skip(
             "JVM session predates the Delta extension; run the gated lane standalone"
         )
+    from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
     from usajobs_etl_service_spark.sinks.delta_merge import delta_merge_upsert
 
     path = str(tmp_path / "t")
@@ -108,7 +109,8 @@ def test_delta_merge_real_path(tmp_path):
     batch = spark.createDataFrame(
         [("b", 20, 2), ("b", 21, 1), ("c", 3, 1)], "k string, v long, seq long"
     )
-    delta_merge_upsert(path, batch, ["k"], order_col="seq")
+    batch = dedup_first_wins(batch, ["k"], "seq").drop("seq")
+    delta_merge_upsert(path, batch, ["k"])
     got = sorted(
         tuple(r) for r in spark.read.format("delta").load(path).collect()
     )

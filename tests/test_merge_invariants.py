@@ -8,7 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from usajobs_etl_service_spark.sinks.upsert import merge_upsert, prepare_batch, upsert_stats
+from usajobs_etl_service_spark.sinks.upsert import merge_upsert, upsert_stats
 
 
 def _rows(rng, keys):
@@ -25,7 +25,7 @@ def test_merge_invariants(spark, seed):
     batch = spark.createDataFrame(_rows(rng, batch_keys), schema)
 
     stats = upsert_stats(base, batch, ["position_uri"])
-    n_batch_distinct = prepare_batch(batch, ["position_uri"]).count()
+    n_batch_distinct = batch.dropDuplicates(["position_uri"]).count()
     n_overlap = len(set(base_keys) & set(batch_keys))
 
     # metrics add up exactly
@@ -39,14 +39,14 @@ def test_merge_invariants(spark, seed):
     assert merged.select("position_uri").distinct().count() == merged.count()
 
     # idempotence: merging the merged batch again -> zero inserts
-    stats2 = upsert_stats(merged, prepare_batch(batch, ["position_uri"]), ["position_uri"])
+    stats2 = upsert_stats(merged, batch.dropDuplicates(["position_uri"]), ["position_uri"])
     assert stats2["inserted"] == 0
-    merged2 = merge_upsert(merged, prepare_batch(batch, ["position_uri"]), ["position_uri"])
+    merged2 = merge_upsert(merged, batch.dropDuplicates(["position_uri"]), ["position_uri"])
     assert merged2.count() == merged.count()
     # last-writer-wins: every batch key's title comes from the batch
     batch_titles = {
         r["position_uri"]: r["position_title"]
-        for r in prepare_batch(batch, ["position_uri"]).collect()
+        for r in batch.dropDuplicates(["position_uri"]).collect()
     }
     for r in merged.filter(F.col("position_uri").isin(list(batch_titles))).collect():
         assert r["position_title"] == batch_titles[r["position_uri"]]

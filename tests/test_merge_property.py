@@ -11,7 +11,8 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from usajobs_etl_service_spark.sinks.upsert import merge_upsert, prepare_batch, upsert_stats
+from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
+from usajobs_etl_service_spark.sinks.upsert import merge_upsert, upsert_stats
 
 KEYS = st.integers(min_value=0, max_value=15)  # tight range -> dups + overlap likely
 ROW = st.tuples(KEYS, st.integers(min_value=0, max_value=999))
@@ -44,14 +45,17 @@ def test_merge_model_parity(spark, base_rows, batch_rows):
         .drop("ingest_seq")
     )
 
-    batch = _df(spark, batch_rows, t0=datetime.datetime(2024, 6, 1))
+    # the caller's in-batch first-wins step, as in JobPipeline.run
+    batch = dedup_first_wins(
+        _df(spark, batch_rows, t0=datetime.datetime(2024, 6, 1)), ["position_uri"], "ingest_seq"
+    )
 
     # model: first occurrence per key wins within the batch (ingest_seq order)
     batch_model: dict[str, str] = {}
     for k, v in batch_rows:
         batch_model.setdefault(f"https://jobs/{k}", f"title-{v}")
 
-    stats = upsert_stats(base, batch, ["position_uri"], order_col="ingest_seq")
+    stats = upsert_stats(base, batch, ["position_uri"])
     n_overlap = len(set(base_model) & set(batch_model))
     assert stats["total"] == len(batch_model)
     assert stats["updated"] == n_overlap
@@ -61,7 +65,6 @@ def test_merge_model_parity(spark, base_rows, batch_rows):
         base,
         batch,
         ["position_uri"],
-        order_col="ingest_seq",
         preserve_cols=["created_at"],
         touch_cols=["updated_at"],
     )
@@ -96,6 +99,6 @@ def test_prepare_batch_first_wins_model(spark, rows):
         model.setdefault(f"https://jobs/{k}", f"title-{v}")
     got = {
         r["position_uri"]: r["position_title"]
-        for r in prepare_batch(batch, ["position_uri"], "ingest_seq").collect()
+        for r in dedup_first_wins(batch, ["position_uri"], "ingest_seq").collect()
     }
     assert got == model

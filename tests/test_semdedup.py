@@ -338,16 +338,13 @@ def test_prototypicality_survives_nan_and_handles_release(spark):
     its cluster's mean; the driver-literal rework must render it as a
     valid SQL literal (never the unresolvable identifier `nanD`) and
     degrade that cluster's scores the way the broadcast-join form did,
-    not crash the whole prune. Also exercises unpersist_handle."""
+    not crash the whole prune."""
     from usajobs_etl_service_spark.operators.semdedup import prototypicality_prune
 
     rows = [(i, [float(i % 2 == j) + 0.01 * j for j in range(4)]) for i in range(8)]
     rows.append((50, [float("nan"), 1.0, 0.0, 0.0]))
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    handle: list = []
-    out = prototypicality_prune(
-        df, n_clusters=2, prune_frac=0.0, unpersist_handle=handle
-    ).collect()
+    out = prototypicality_prune(df, n_clusters=2, prune_frac=0.0).collect()
     # the job runs; clean rows keep finite scores
     clean = [r for r in out if r["vec_id"] != 50]
     assert len(clean) >= 7
@@ -356,8 +353,6 @@ def test_prototypicality_survives_nan_and_handles_release(spark):
         for r in clean
         if r["proto_cos"] == r["proto_cos"]  # skip NaN comparisons
     )
-    assert len(handle) == 1
-    handle[0].unpersist()
 
 
 def test_semantic_contamination_planted_recall(spark, sf_dir):

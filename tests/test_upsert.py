@@ -10,6 +10,7 @@ import datetime
 import pytest
 from pyspark.sql import functions as F
 
+from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
 from usajobs_etl_service_spark.sinks.upsert import merge_upsert, upsert_stats
 
 SCHEMA = "position_uri string, position_title string, salary string, created_at timestamp, updated_at timestamp"
@@ -83,8 +84,9 @@ def test_in_batch_first_wins(spark, base):
         ],
         SCHEMA + ", ingest_seq long",
     )
-    merged = merge_upsert(base, batch, ["position_uri"], order_col="ingest_seq")
+    batch = dedup_first_wins(batch, ["position_uri"], "ingest_seq")
+    merged = merge_upsert(base, batch, ["position_uri"])
     row = merged.filter(F.col("position_uri") == "https://jobs/5").first()
     assert row["position_title"] == "First"
-    stats = upsert_stats(base, batch, ["position_uri"], order_col="ingest_seq")
+    stats = upsert_stats(base, batch, ["position_uri"])
     assert stats == {"inserted": 1, "updated": 0, "total": 1}

@@ -237,7 +237,7 @@ def run(outdir: str) -> None:
 def _cached_storage_bytes(spark) -> dict[str, int]:
     """Sum of memory+disk bytes currently held by CACHED blocks, via
     the UI REST storage endpoint (zeros if the UI is off). Sampled
-    right after a query's action, BEFORE its unpersist, this is the
+    right after a query's action, BEFORE its clearCache(), this is the
     peak persisted footprint that query pins."""
     out = {"mem": 0, "disk": 0}
     ui = spark.sparkContext.uiWebUrl
@@ -304,15 +304,12 @@ def _persist_storage_smoke(spark, outdir: str, big: str) -> dict[str, dict]:
     def run_case(name, make):
         rec: dict[str, dict] = {}
         for label, d, mult in (("sf0.1", BASE_SF, 1), (big, outdir, MULT)):
-            handle: list = []
             before = stage_totals(spark)
             t0 = _time.perf_counter()
-            materialize(make(d, mult, handle))
+            materialize(make(d, mult))
             sec = _time.perf_counter() - t0
             stored = _cached_storage_bytes(spark)
             after = stage_totals(spark, after_stage=before["max_stage_id"])
-            for frame in handle:
-                frame.unpersist()
             spark.catalog.clearCache()
             rec[label] = {
                 "sec": round(sec, 3),
@@ -332,31 +329,28 @@ def _persist_storage_smoke(spark, outdir: str, big: str) -> dict[str, dict]:
 
     run_case(
         "q175_kneser_ney",
-        lambda d, m, h: kneser_ney_scores(
+        lambda d, m: kneser_ney_scores(
             read_table(spark, d, "documents").select("doc_id", "text"),
             discount=0.75,
-            unpersist_handle=h,
         ),
     )
     run_case(
         "q241_containment",
-        lambda d, m, h: containment_pairs(
+        lambda d, m: containment_pairs(
             read_table(spark, d, "documents").select("doc_id", "text"),
             n=8,
             threshold=0.9,
             max_gram_df=1000,
-            unpersist_handle=h,
         ),
     )
     run_case(
         "q225_association",
-        lambda d, m, h: association_rules(
+        lambda d, m: association_rules(
             scaled_lineitem(m),
             "l_orderkey",
             "l_partkey",
             min_pair_count=2,
             top_n=25,
-            unpersist_handle=h,
         ),
     )
     return out

@@ -10,16 +10,13 @@ inside the operator at which the cache could be released. Memory
 blocks are LRU-evictable, but evicted MEMORY_AND_DISK blocks spill to
 local disk and are only freed on unpersist or session shutdown — a
 long-lived session running many such queries accumulates disk usage
-without bound. Callers that loop therefore have two release points:
+without bound. Spark's ContextCleaner does not free them either: the
+CacheManager keeps a strong reference to every cached plan, so it
+survives garbage collection of the returned frame.
 
-- pass ``unpersist_handle=[]`` where the operator accepts it
-  (semdedup.semantic_dedup, semdedup.prototypicality_prune,
-  association.association_rules, retrieval.bigram_lm_scores,
-  retrieval.kneser_ney_scores, classifier.hashed_linear_score,
-  neardup.containment_pairs): the operator appends every frame it
-  persisted, and the caller unpersists them once its action completes;
-- or call ``spark.catalog.clearCache()`` between queries, which is
-  what bench.py does (round 13) — it also stops Spark's CacheManager
-  plan-fingerprint matching from silently serving one query's cold run
-  from a sibling query's cache.
+The one release point is the caller's: run the action, then call
+``spark.catalog.clearCache()``. Every loop in the repo does this
+(bench.py, perfbench/queries.py, tools/scale_smoke.py); it also stops
+the CacheManager's plan-fingerprint matching from silently serving one
+query's cold run from a sibling query's cache.
 """

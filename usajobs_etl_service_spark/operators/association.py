@@ -39,13 +39,8 @@ def association_rules(
     *,
     min_pair_count: int = 2,
     top_n: int = 25,
-    unpersist_handle: list | None = None,
 ) -> DataFrame:
     """Top-``top_n`` size-2 rules ``antecedent -> consequent`` by lift.
-
-    ``unpersist_handle``: pass a list to receive the frames this
-    operator persists, for release after the caller's action completes
-    (see operators/__init__ on the persist lifecycle).
 
     Returns ``(antecedent, consequent, pair_n, supp_a, supp_c,
     confidence, lift)`` — both directions of every unordered pair are
@@ -72,8 +67,6 @@ def association_rules(
         .distinct()
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if unpersist_handle is not None:
-        unpersist_handle.append(items)
     supports = items.groupBy(F.col("__i").alias("item")).agg(
         F.count(F.lit(1)).alias("supp")
     )

@@ -84,7 +84,6 @@ def hashed_linear_score(
     bias: float = 0.0,
     bigrams: bool = True,
     threshold: float | None = None,
-    unpersist_handle: list | None = None,
 ) -> DataFrame:
     """Score every document with the hashed linear model.
 
@@ -113,8 +112,6 @@ def hashed_linear_score(
         from pyspark.storagelevel import StorageLevel
 
         base = base.persist(StorageLevel.MEMORY_AND_DISK)
-        if unpersist_handle is not None:
-            unpersist_handle.append(base)
     uni = base.select("__id", F.explode("ts").alias("feat"))
     feats = uni
     if bigrams:

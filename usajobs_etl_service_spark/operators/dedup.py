@@ -1,7 +1,8 @@
 """Deduplication operators: the reference's in-batch first-wins dedup
 (A6/J2, reference ``etl/etl.py:452-465``), sub-document unit dedup and
 quality-aware keep-best selection (SURVEY.md §2.11). Exact any-row-per-key
-dedup is plain ``dropDuplicates`` (``sinks/upsert.prepare_batch``).
+dedup is plain ``dropDuplicates``, which the upsert sinks apply to their
+batch; first-wins runs here, before the sink.
 
 Scale notes: first-wins is a single hash-partition shuffle on the key.
 First-wins needs a deterministic order column — ``dropDuplicates`` alone

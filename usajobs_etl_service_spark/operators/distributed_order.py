@@ -51,9 +51,9 @@ def _ranged(df: DataFrame, order_cols: Sequence[Column | str]) -> DataFrame:
     InMemoryRelation forces one materialized exchange both branches
     read, making pid agreement structural — and drops the second full
     scan+range-shuffle of the data as a side effect. MEMORY_AND_DISK
-    spills large inputs instead of evicting mid-query; the cache is
-    released by Spark's ContextCleaner once the returned plan is
-    garbage-collected."""
+    spills large inputs instead of evicting mid-query; the cache stays
+    until the caller's ``spark.catalog.clearCache()`` after its action
+    (garbage collection does not release it; operators/__init__)."""
     parts = df.repartitionByRange(*order_cols).withColumn(_PID, F.spark_partition_id())
     return parts.persist(StorageLevel.MEMORY_AND_DISK)
 

@@ -306,8 +306,8 @@ def spearman(
         )
         # four consumers (two per-value aggregates + two value
         # join-backs) — persist so an expensive upstream derivation is
-        # computed once; released by the ContextCleaner once the
-        # returned plan is garbage-collected (the _ranged posture)
+        # computed once; released by the caller's clearCache() after
+        # its action (the _ranged posture)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 

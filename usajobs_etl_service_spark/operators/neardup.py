@@ -948,7 +948,6 @@ def containment_pairs(
     threshold: float = 0.9,
     max_gram_df: int = 1000,
     observation=None,
-    unpersist_handle: list | None = None,
 ) -> DataFrame:
     """EXACT n-gram containment near-dup (Broder 1997's asymmetric
     resemblance twin): ``C(A->B) = |grams(A) & grams(B)| / |grams(A)|``
@@ -1003,8 +1002,6 @@ def containment_pairs(
     kept = grams.join(hot.select("g"), "g", "left_anti").persist(
         StorageLevel.MEMORY_AND_DISK
     )
-    if unpersist_handle is not None:
-        unpersist_handle.extend([grams, kept])
     sizes = kept.groupBy(id_col).agg(F.count(F.lit(1)).alias("__sz"))
     a = kept.select(F.col(id_col).alias("id_a"), "g")
     b = kept.select(F.col(id_col).alias("id_b"), "g")

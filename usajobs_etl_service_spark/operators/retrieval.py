@@ -160,7 +160,6 @@ def bigram_lm_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     lam: float = 0.75,
-    unpersist_handle: list | None = None,
 ) -> DataFrame:
     """Per-document interpolated bigram-LM surprisal (mean nats/token)
     — the order-2 upgrade of :func:`unigram_lm_scores`'s CCNet-style
@@ -198,8 +197,6 @@ def bigram_lm_scores(
         # tokenize pass re-ran per reference (round 12, guide §1.2)
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if unpersist_handle is not None:
-        unpersist_handle.append(base)
     trans = (
         base.select(
             "doc_id",
@@ -224,8 +221,6 @@ def bigram_lm_scores(
         # four consumers: total, both scoring joins, the first-token leg
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if unpersist_handle is not None:
-        unpersist_handle.extend([trans, unigrams])
     bigrams = trans.groupBy("prev", "cur").agg(F.sum("tf_b").alias("cb"))
     total = unigrams.agg(F.sum("cu").cast("double").alias("t_total"))
     bigram_nats = (
@@ -373,7 +368,6 @@ def kneser_ney_scores(
     id_col: str = "doc_id",
     text_col: str = "text",
     discount: float = 0.75,
-    unpersist_handle: list | None = None,
 ) -> DataFrame:
     """Per-document surprisal under an interpolated Kneser-Ney bigram
     LM (Kneser & Ney 1995; the Chen & Goodman 1998 interpolated form
@@ -437,8 +431,6 @@ def kneser_ney_scores(
         # four consumers: ctx, cont, b_total, and the scoring join
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if unpersist_handle is not None:
-        unpersist_handle.extend([trans, bigrams])
     ctx = bigrams.groupBy("prev").agg(
         F.sum("cb").alias("c_ctx"), F.count(F.lit(1)).alias("n_follow")
     )

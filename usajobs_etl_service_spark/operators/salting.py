@@ -585,8 +585,8 @@ def join_cardinality_report(
 
     # persisted: the per-key grid feeds BOTH the top-k and the TOTAL
     # row — unpersisted, each consumer would re-run both key-grouped
-    # aggregates and the join (released by the ContextCleaner when the
-    # returned plan is garbage-collected, the _ranged posture)
+    # aggregates and the join (released by the caller's clearCache()
+    # after its action, the _ranged posture)
     per_key = (
         lc.join(rc, "key")
         .select(

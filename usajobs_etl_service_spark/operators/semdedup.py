@@ -477,8 +477,8 @@ def _dup_pair_parts(
     replaces a second full scan + normalize + assign + cluster_id
     shuffle. The cache also makes the observe() metrics single-fire
     (they populate when the cache builds, not once per join side) and
-    is released by Spark's ContextCleaner once the returned plans are
-    garbage-collected (same posture as distributed_order._ranged)."""
+    is released by the caller's ``spark.catalog.clearCache()`` after its
+    action (same posture as distributed_order._ranged)."""
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
@@ -644,7 +644,6 @@ def prototypicality_prune(
     n_clusters: int = 32,
     prune_frac: float = 0.25,
     seed_tag: str = "#proto",
-    unpersist_handle: list | None = None,
 ) -> DataFrame:
     """Prototypicality-based data pruning (Sorscher et al. 2022,
     "Beyond neural scaling laws: beating power law scaling via data
@@ -688,12 +687,9 @@ def prototypicality_prune(
     total, the structural minimum for a mean-relative score.
 
     Cache lifetime: the persisted frame backs the RETURNED corpus-
-    sized result, so there is no safe in-function unpersist point.
-    Batch drivers looping over corpora should pass ``unpersist_handle``
-    (a list; the persisted frame is appended) and call
-    ``handle[0].unpersist()`` once done with the result — the
-    round-8-review cache-release contract (hits_scores resolves it by
-    eager collect; this output is corpus-sized, so a handle it is).
+    sized result, so there is no safe in-function unpersist point; the
+    caller releases it with ``spark.catalog.clearCache()`` after its
+    action (operators/__init__ on the persist lifecycle).
     """
     if not 0.0 <= prune_frac <= 1.0:
         raise ValueError(f"prune_frac must be in [0, 1], got {prune_frac}")
@@ -780,8 +776,6 @@ def prototypicality_prune(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    if unpersist_handle is not None:
-        unpersist_handle.append(assigned)
     mean_rows = (
         assigned.filter(F.col("cluster_id").isNotNull())
         .groupBy("cluster_id")

@@ -17,28 +17,20 @@ ships neither, so the lane skip-reports here and runs elsewhere.
 
 Scale posture: Delta MERGE is itself a join of the batch against the
 target's matching files (data-skipping prunes by key min/max); the
-in-batch first-wins dedup runs BEFORE the merge exactly as in
-merge_upsert — a batch with duplicate keys would otherwise make the
-MERGE non-deterministic (Delta raises on multiple source matches).
+batch is deduped by key BEFORE the merge exactly as in merge_upsert —
+a batch with duplicate keys would otherwise make the MERGE
+non-deterministic (Delta raises on multiple source matches).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-from usajobs_etl_service_spark.sinks.upsert import prepare_batch
 
-
-def delta_merge_upsert(
-    target_path: str,
-    batch: DataFrame,
-    key_cols: list[str],
-    *,
-    order_col: str | None = None,
-) -> None:
+def delta_merge_upsert(target_path: str, batch: DataFrame, key_cols: list[str]) -> None:
     """MERGE ``batch`` into the Delta table at ``target_path``:
-    last-writer-wins per key (first-wins WITHIN the batch via
-    ``prepare_batch``, mirroring merge_upsert/reference semantics).
+    last-writer-wins per key, any one batch row per key (run
+    ``dedup_first_wins`` first for in-batch first-wins, as for merge_upsert).
 
     Raises ``ImportError`` with install guidance when delta-spark is
     absent — callers on plain-parquet deployments use
@@ -56,9 +48,7 @@ def delta_merge_upsert(
 
     if not key_cols:
         raise ValueError("key_cols must be non-empty")
-    b = prepare_batch(batch, key_cols, order_col)
-    if order_col is not None and order_col in b.columns:
-        b = b.drop(order_col)
+    b = batch.dropDuplicates(key_cols)
 
     target = DeltaTable.forPath(batch.sparkSession, target_path)
     cond = " AND ".join(f"t.`{k}` <=> s.`{k}`" for k in key_cols)

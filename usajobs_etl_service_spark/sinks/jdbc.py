@@ -98,30 +98,18 @@ def jdbc_upsert(
     max_connections: int = 8,
     connect: Callable | None = None,
     dsn: str | None = None,
-    order_col: str | None = None,
-    drop_order_col: bool = True,
 ) -> dict:
     """Distributed upsert of ``df`` into PostgreSQL ``table``. Returns
     ``{"inserted", "updated", "total"}`` (reference metrics shape).
 
-    The batch is deduped by ``key`` first (first-wins by ``order_col``
-    when given, reference etl.py:452-465): a key appearing twice in one
+    Every column of ``df`` is written; any one row per ``key`` is kept
+    (run ``dedup_first_wins`` first for first-wins): a key twice in one
     multi-VALUES statement makes PG abort with "ON CONFLICT DO UPDATE
     command cannot affect row a second time", and duplicates split across
     partitions would race on separate connections. ``repartition(key)``
     additionally pins every occurrence of a key to one connection, so
-    concurrent partition writes never contend on the same row.
-
-    ``drop_order_col`` (default True) excludes ``order_col`` from the
-    written column list — the common case of a synthetic ordering column
-    (ingest_seq) that is not a table column. Pass ``drop_order_col=False``
-    when the ordering column (e.g. ``extracted_at``) IS a real column of
-    the target table and must be written."""
-    from usajobs_etl_service_spark.sinks.upsert import prepare_batch
-
-    df = prepare_batch(df, [key], order_col)
-    if drop_order_col and order_col is not None and order_col in df.columns:
-        df = df.drop(order_col)
+    concurrent partition writes never contend on the same row."""
+    df = df.dropDuplicates([key])
     columns = df.columns
 
     if connect is None:

@@ -2,7 +2,9 @@
 §2.4 A8; reference ``etl/etl.py:445-525``, trigger ``init.sql:28-41``).
 
 Semantics preserved from the reference:
-- **first-wins within a batch** (in-batch dedup by key, etl.py:452-465),
+- **first-wins within a batch** (etl.py:452-465): the caller runs
+  ``dedup_first_wins`` first, as ``JobPipeline.run`` does; the sink
+  keeps any one row per key, so no key is ever written twice,
 - **last-writer-wins against the table** (ON CONFLICT DO UPDATE),
 - ``created_at`` preserved on update, ``updated_at`` refreshed
   (DO UPDATE list excludes created_at; trigger refreshes updated_at),
@@ -10,7 +12,7 @@ Semantics preserved from the reference:
   derives them from the PG ``(xmax = 0)`` trick; here they are the
   semi/anti-join split of the batch against the table.
 
-Scale shape: the batch is at most ``max_pages x PAGE_SIZE_CAP`` postings
+Scale shape: the batch is at most ``max_pages x ingest.PAGE_SIZE`` postings
 (the REST scan's page clamp), orders of magnitude smaller than the
 table, so the batch side is always broadcast — the merge is then a scan
 of the base table with a broadcast hash anti-join (no shuffle of the
@@ -24,22 +26,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from usajobs_etl_service_spark.operators.dedup import dedup_first_wins
-
-
-def prepare_batch(batch: DataFrame, key_cols: list[str], order_col: str | None = None) -> DataFrame:
-    """In-batch first-wins dedup (A6) — mirrors reference etl.py:452-465."""
-    if order_col is not None:
-        return dedup_first_wins(batch, key_cols, order_col)
-    return batch.dropDuplicates(key_cols)
-
 
 def merge_upsert(
     base: DataFrame,
     batch: DataFrame,
     key_cols: list[str],
     *,
-    order_col: str | None = None,
     preserve_cols: list[str] | None = None,
     touch_cols: list[str] | None = None,
 ) -> DataFrame:
@@ -51,9 +43,7 @@ def merge_upsert(
     ``current_timestamp()`` on every written row (reference:
     ``updated_at`` via trigger).
     """
-    b = prepare_batch(batch, key_cols, order_col)
-    if order_col is not None and order_col in b.columns:
-        b = b.drop(order_col)
+    b = batch.dropDuplicates(key_cols)
     preserve_cols = preserve_cols or []
     touch_cols = touch_cols or []
 
@@ -74,20 +64,13 @@ def merge_upsert(
     return untouched.unionByName(b.select(*base.columns))
 
 
-def merge_metrics(
-    base: DataFrame,
-    batch: DataFrame,
-    key_cols: list[str],
-    *,
-    order_col: str | None = None,
-) -> DataFrame:
+def merge_metrics(base: DataFrame, batch: DataFrame, key_cols: list[str]) -> DataFrame:
     """A8: one-row DataFrame (inserted, updated, total) — the semi/anti
     split that replaces the reference's ``(xmax = 0) AS inserted`` flag
     readback (etl.py:487, 514-515). One pass over the (small) batch with
     a broadcast-able probe of base keys.
     """
-    b = prepare_batch(batch, key_cols, order_col)
-    keys_b = b.select(*key_cols)
+    keys_b = batch.dropDuplicates(key_cols).select(*key_cols)
     # prune base keys to the batch's keys (broadcast semi on the small
     # side) before the probe join — never materialize/shuffle the full
     # base key set
@@ -105,8 +88,8 @@ def merge_metrics(
     )
 
 
-def upsert_stats(base: DataFrame, batch: DataFrame, key_cols: list[str], order_col: str | None = None) -> dict:
+def upsert_stats(base: DataFrame, batch: DataFrame, key_cols: list[str]) -> dict:
     """Reference-shaped return value: ``{"inserted": n, "updated": m,
     "total": n+m}`` (etl.py:519-524)."""
-    row = merge_metrics(base, batch, key_cols, order_col=order_col).first()
+    row = merge_metrics(base, batch, key_cols).first()
     return {"inserted": row["inserted"], "updated": row["updated"], "total": row["total"]}

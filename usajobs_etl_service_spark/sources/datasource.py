@@ -46,7 +46,7 @@ from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-PAGE_SIZE_CAP = 500
+from usajobs_etl_service_spark.sources.ingest import PAGE_SIZE
 
 RAW_SCHEMA = "page int, payload string"
 
@@ -124,7 +124,7 @@ class PagePartition(InputPartition):
 class RestJobsReader(DataSourceReader):
     def __init__(self, options: dict):
         self.options = options
-        self.per_page = min(int(options.get("results_per_page", PAGE_SIZE_CAP)), PAGE_SIZE_CAP)
+        self.per_page = min(int(options.get("results_per_page", PAGE_SIZE)), PAGE_SIZE)
         self.max_pages = int(options.get("max_pages", 20))
         self.mode = options.get("mode", "mock")
         self.total = int(options.get("mock_total", 1200))

@@ -19,7 +19,9 @@ from pyspark.sql import functions as F
 from usajobs_etl_service_spark.functions import transforms as X
 from usajobs_etl_service_spark.schemas import API_RESPONSE_SCHEMA
 
-PAGE_SIZE = 500  # API page clamp (reference etl.py:193)
+# API page clamp (reference etl.py:193), shared by both sources: ingest_seq
+# is a first-wins order only while no page holds more than PAGE_SIZE items
+PAGE_SIZE = 500
 
 
 def parse_api_pages(raw: DataFrame, json_col: str = "payload", page_col: str = "page") -> DataFrame:

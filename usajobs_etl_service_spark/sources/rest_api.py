@@ -37,9 +37,7 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from usajobs_etl_service_spark.sources.ingest import flatten_postings, parse_api_pages
-
-PAGE_SIZE_CAP = 500
+from usajobs_etl_service_spark.sources.ingest import PAGE_SIZE, flatten_postings, parse_api_pages
 
 
 class RateLimitedError(Exception):
@@ -116,7 +114,7 @@ class RestPageSource:
     scan (a retried page counts once; reference etl.py:570-578)."""
 
     transport: Callable[[dict], dict]
-    page_size: int = PAGE_SIZE_CAP
+    page_size: int = PAGE_SIZE
     max_pages: int = 20
     delay_seconds: float = 0.0
     retry: RetryPolicy = field(default_factory=RetryPolicy)
@@ -128,7 +126,7 @@ class RestPageSource:
         # S2: predicate pushdown into query params (reference etl.py:191-199)
         params = {
             "Keyword": keyword,
-            "ResultsPerPage": min(self.page_size, PAGE_SIZE_CAP),
+            "ResultsPerPage": min(self.page_size, PAGE_SIZE),
             "Page": page,
             "WhoMayApply": "All",
         }
@@ -138,7 +136,7 @@ class RestPageSource:
 
     def fetch_pages(self, keyword: str, location: str | None = None) -> Iterator[tuple[int, dict]]:
         """Yield (page_number, payload) until exhaustion (S3)."""
-        per_page = min(self.page_size, PAGE_SIZE_CAP)
+        per_page = min(self.page_size, PAGE_SIZE)
         self.api_calls = 0
         for page in range(1, self.max_pages + 1):
             if page > 1 and self.delay_seconds:
